@@ -8,9 +8,11 @@ One round (SURVEY §3.4):
                         window-rank per host — skew-bounded top-k)
     → fetch            (corpus mode: broadcast-inner resolver join —
                         the corpus is scanned in place, never shuffled;
+                        the fetched batch is, once, round-robin;
                         http mode: GET inside the task, URL.hs:72-82)
     → extraction       (one Arrow-batched mapInPandas pass: images +
-                        canonical outlinks + murmur3 hashes per page)
+                        canonical outlinks per page, their murmur3
+                        hashes in one numpy call per batch)
     → link dedup       (min-by-parent-fetch-seq groupBy — matches the
                         simulator's first-discoverer-wins rule)
     → robots filter    (broadcast join + JVM-side prefix check)
@@ -78,9 +80,11 @@ Scale notes (10^10 frontier, 1000 executors):
   partitioned mode the bloom lives only as a sharded parquet table
   probed via a co-grouped join.
 * per-round shuffles touch only politeness-bounded or per-round-link
-  data: the politeness window (O(pending) — the priority queue), link
-  dedup (O(links/round)), bloom shard grouping (O(new/round)). The
-  corpus, the seen history, and the frontier base move zero bytes.
+  data: the politeness window (O(pending) — the priority queue), the
+  fetched batch's round-robin spread across extraction tasks
+  (O(batch)), link dedup (O(links/round)), bloom shard grouping
+  (O(new/round)). The corpus, the seen history, and the frontier base
+  move zero bytes.
 * politeness ranking partitions by host; hot hosts are pre-pruned by a
   salted first-phase top-k so no partition ever sees more than
   ``n_salts × budget`` rows per host.
@@ -147,7 +151,8 @@ class _BloomBitsAccum(AccumulatorParam):
         return v1
 
 from .bloom import BloomShards, build_bits, contains_in_bits, shard_of
-from .logic import DEFAULT_BUDGET, PRIORITY_DECAY, extract_page, url_hash
+from .hashing import murmur3_64_batch
+from .logic import DEFAULT_BUDGET, PRIORITY_DECAY, extract_page
 from .tableio import SnapshotStore
 from .urlnorm import canonicalize_url, url_host
 
@@ -205,9 +210,11 @@ _ROUND_DATA_SCHEMA = T.StructType(
 
 def _extract_batches(batches: Iterable[pd.DataFrame]):
     """mapInPandas kernel: fetched pages → extraction rows (one out-row
-    per page; images/links as arrays so a single parse serves both)."""
+    per page; images/links as arrays so a single parse serves both).
+    The batch's out-links are hashed in one ``murmur3_64_batch`` call."""
     for pdf in batches:
         out = {name: [] for name in _EXTRACT_SCHEMA.fieldNames()}
+        page_links: list = []
         for row in pdf.itertuples(index=False):
             status = int(row.status) if pd.notna(row.status) else 0
             html = row.html if isinstance(row.html, str) else None
@@ -219,7 +226,8 @@ def _extract_batches(batches: Iterable[pd.DataFrame]):
                     {"image_id": iid, "src": src, "caption": cap}
                     for iid, src, cap in ext.images
                 ]
-                links = [{"url": u, "url_hash": url_hash(u)} for u in ext.links]
+                links = ext.links
+            page_links.append(links)
             out["fetch_seq"].append(row.fetch_seq)
             out["url"].append(row.url)
             out["url_hash"].append(row.url_hash)
@@ -230,7 +238,10 @@ def _extract_batches(batches: Iterable[pd.DataFrame]):
             out["status"].append(status)
             out["n_images"].append(len(imgs))
             out["imgs"].append(imgs)
-            out["links"].append(links)
+        hashes = iter(murmur3_64_batch([u for ls in page_links for u in ls]).tolist())
+        out["links"] = [
+            [{"url": u, "url_hash": next(hashes)} for u in ls] for ls in page_links
+        ]
         yield pd.DataFrame(out)
 
 
@@ -310,9 +321,7 @@ class CrawlEngine:
         # stand-in for HTTP GET); http mode GETs them for real inside the
         # fetch task, so no pages table is needed
         if fetch_mode == "corpus":
-            pages_path = os.path.join(corpus_dir, "pages.parquet")
-            self._tune_scan_splits(pages_path)
-            self.pages = spark.read.parquet(pages_path)
+            self.pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
         else:
             self.pages = None
         robots = spark.read.parquet(os.path.join(corpus_dir, "robots.parquet"))
@@ -335,55 +344,31 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------
 
-    def _tune_scan_splits(self, pages_path: str) -> None:
-        """Shrink ``spark.sql.files.maxPartitionBytes`` so the corpus
-        scan yields ≥ 4 even waves of tasks per core.
-
-        The fetch+extract stage runs DIRECTLY on the corpus scan
-        partitions (page bodies are never shuffled), so scan split
-        count IS the extraction parallelism. Synthetic/compressible
-        corpora compress ~20×, so a 32 MB split can hide minutes of
-        per-task decode+extract work: e.g. a 274 MB corpus at the
-        session default scans as ~11 tasks — 1.4 ragged waves on 8
-        cores (~73% utilization) while 2 cores pack them evenly, which
-        directly caps N→4N scaling efficiency. Only ever SHRINKS the
-        session value (small-corpus regime); at production corpus
-        sizes bytes/(4·slots) exceeds the session default and this is
-        a no-op. Floor of 1 MB keeps splits ≥ row-group size."""
-        try:
-            total = sum(
-                os.path.getsize(os.path.join(d, f))
-                for d, _, fs in os.walk(pages_path)
-                for f in fs
-                if not f.startswith(("_", "."))
-            ) or os.path.getsize(pages_path)
-        except OSError:
-            return
-        slots = self.spark.sparkContext.defaultParallelism
-        cur = self.spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        cur_b = int(str(cur).lower().rstrip("b"))
-        split = max(1 << 20, min(cur_b, total // (4 * slots) or 1))
-        if split < cur_b:
-            self.spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-
     def _seed_frontier(self) -> DataFrame:
         """Distributed seed prep: canonicalize+hash in Arrow batches, then
         dedupe by exact URL keeping the lowest priority-order entry (the
-        simulator's iteration order over url-sorted seeds)."""
+        simulator's iteration order over url-sorted seeds). Each batch's
+        canonical URLs are hashed in one ``murmur3_64_batch`` call."""
         seeds = self.spark.read.parquet(os.path.join(self.corpus_dir, "seeds.parquet"))
 
         def canon(batches):
             for pdf in batches:
-                rows = {"url": [], "url_hash": [], "host": [], "priority": []}
+                urls, hosts, prios = [], [], []
                 for r in pdf.itertuples(index=False):
                     c = canonicalize_url(r.url)
                     if c is None:
                         continue
-                    rows["url"].append(c)
-                    rows["url_hash"].append(url_hash(c))
-                    rows["host"].append(url_host(c) or "")
-                    rows["priority"].append(float(r.priority))
-                yield pd.DataFrame(rows)
+                    urls.append(c)
+                    hosts.append(url_host(c) or "")
+                    prios.append(float(r.priority))
+                yield pd.DataFrame(
+                    {
+                        "url": urls,
+                        "url_hash": murmur3_64_batch(urls),
+                        "host": hosts,
+                        "priority": prios,
+                    }
+                )
 
         canonical = seeds.repartition(self.spark.sparkContext.defaultParallelism).mapInPandas(
             canon, "url string, url_hash long, host string, priority double"
@@ -655,8 +640,7 @@ class CrawlEngine:
     #: way (any host-top-budget row is in its salt's top-budget), so
     #: ranked output is identical — this is a plan choice, not a
     #: semantics choice. Production pendings (≫ this) always salt.
-    #: Env-overridable for A/B measurement (0 = always salt).
-    _SALT_SKIP_PENDING = int(os.environ.get("SPARK_GRAFT_SALT_SKIP", "200000"))
+    _SALT_SKIP_PENDING = 200_000
 
     def _politeness_batch(
         self, frontier: DataFrame, seq_offset: int, n_pending: int | None = None
@@ -753,9 +737,14 @@ class CrawlEngine:
         )
         return ranked, batch
 
-    def _fetch_batch(self, batch: DataFrame, n_pending: int, prev_batch: int | None):
+    def _fetch_batch(self, batch: DataFrame):
         """Politeness batch → (…, status, html) rows, partitioned for the
         Python extraction stage.
+
+        Both modes spread the batch round-robin over one task per slot:
+        equal row counts make one even wave, and every extra Python task
+        costs a fixed ~0.2–0.3 s (worker hand-off, measured on a 4-core
+        host) that more, smaller waves would pay for nothing.
 
         Corpus mode is the offline stand-in for HTTP GET: a broadcast
         INNER join (pages ⋈ bc(batch)) scans the fat corpus in place —
@@ -764,11 +753,13 @@ class CrawlEngine:
         body each round. Batch URLs absent from the corpus (dangling
         links — the simulator reports status 0) are recovered with an
         inverted probe that touches only the corpus's ``url`` COLUMN
-        (parquet column pruning: no html bytes), and extraction runs
-        directly on the scan partitions — page bodies are never
-        shuffled, persisted, or broadcast anywhere in the round."""
+        (parquet column pruning: no html bytes). The corpus is never
+        shuffled; the fetched batch is, once: a round-robin repartition
+        after the join. Without it extraction would run on the scan
+        splits, and since the corpus is host-sorted while politeness
+        takes a few pages per host, most of a batch can sit in the one
+        split holding the many small tail hosts — one straggler task."""
         slots = self.spark.sparkContext.defaultParallelism
-        est = prev_batch if prev_batch is not None else n_pending
         bsel = batch.select(*_BATCH_COLS)
         if self.fetch_mode == "corpus":
             fetched = self.pages.select("url", "html", "status").join(
@@ -785,18 +776,15 @@ class CrawlEngine:
                 .withColumn("html", F.lit(None).cast("string"))
                 .withColumn("status", F.lit(None).cast("int"))
             )
-            return fetched.unionByName(missing.select(*fetched.columns))
+            return fetched.unionByName(missing.select(*fetched.columns)).repartition(slots)
         # real HTTP GET inside the task: the politeness window upstream
-        # bounds per-host request counts per round. Partition by the
-        # expected batch size (the previous round's, since budgets
-        # change slowly; ≥ slots, ≤ 4× slots, ~32 pages/task) so tiny
-        # rounds don't pay 4×slots task overheads and fat rounds still
-        # get even request waves
+        # bounds per-host request counts per round; the batch (no bodies
+        # yet) is spread before the fetch so requests go out in one even
+        # wave
         from .fetch import http_fetch_batch
 
         cfg = self.fetch_config
-        par = int(min(slots * 4, max(slots, est // 32 + 1)))
-        sel = bsel.repartition(par)
+        sel = bsel.repartition(slots)
         fetch_schema = T.StructType(
             sel.schema.fields
             + [
@@ -872,7 +860,6 @@ class CrawlEngine:
             # delta rows from a torn (uncommitted) round are FP-only.
 
         rounds_sec = 0.0
-        prev_batch: int | None = None
         prev_new: int | None = None
         for rnd in range(start_round, self.max_rounds):
             round_t0 = time.perf_counter()
@@ -883,7 +870,7 @@ class CrawlEngine:
                 break
             frontier = self._pending_frontier(rnd)
             ranked, batch = self._politeness_batch(frontier, seq_offset, n_pending)
-            fetched_in = self._fetch_batch(batch, n_pending, prev_batch)
+            fetched_in = self._fetch_batch(batch)
             extracted = fetched_in.mapInPandas(
                 lambda it: _extract_batches(it), _EXTRACT_SCHEMA
             ).withColumn("round", F.lit(rnd))
@@ -900,7 +887,6 @@ class CrawlEngine:
             ).write.mode("overwrite").parquet(rd_path)
             m1 = obs1.get
             n_fetched = int(m1["n_fetched"])
-            prev_batch = n_fetched
             ranked.unpersist()
             t0 = _trace(f"r{rnd} politeness+fetch+extract+write", t0)
 

@@ -126,6 +126,28 @@ def test_image_fidelity_vs_corpus(spark, world_dir, engine_result):
             assert np.array_equal(decoded, truth)
 
 
+@pytest.mark.parametrize("two_level", [False, True], ids=["single_window", "two_level"])
+def test_salted_politeness_matches_simulator(
+    spark, world_dir, sim_result, tmp_path_factory, monkeypatch, two_level
+):
+    """The production politeness path — salted pre-phase, per-host
+    counts and the host_base prefix sum, as a single cumulative window
+    or as the two-level range-partitioned scan — reproduces the
+    simulator. The test world is far below both thresholds, so they are
+    forced."""
+    from scalpel_spark.crawl.engine import CrawlEngine
+
+    monkeypatch.setattr(CrawlEngine, "_SALT_SKIP_PENDING", 0)
+    out = str(tmp_path_factory.mktemp("crawl_salted"))
+    eng = CrawlEngine(spark, world_dir, out, max_rounds=MAX_ROUNDS)
+    eng._two_level_scan = two_level
+    summary = eng.run()
+    assert summary["total_fetched"] == len(sim_result.fetch_log)
+    assert _eng_log_tuples(eng) == _sim_log_tuples(sim_result)
+    eng_seen = {(r.url_hash, r.url) for r in eng.seen_df().collect()}
+    assert eng_seen == {(h, u) for h, u in sim_result.seen.items()}
+
+
 def test_partitioned_bloom_mode_matches(spark, world_dir, sim_result, tmp_path_factory):
     """bloom_mode='partitioned' (sharded parquet bloom probed via a
     co-grouped join, zero driver bloom traffic — the 10^10 path) must
@@ -301,3 +323,51 @@ def test_pending_frontier_plan_broadcasts_tombstones(spark, world_dir, tmp_path_
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert "Exchange hashpartitioning" not in plan, plan
+
+
+def _plan_path(node, pred):
+    """JVM physical plan nodes from ``node`` down to the first node
+    matching ``pred`` (depth first), or None."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    if pred(node):
+        return [node]
+    children = node.children()
+    for i in range(children.size()):
+        sub = _plan_path(children.apply(i), pred)
+        if sub is not None:
+            return [node] + sub
+    return None
+
+
+def test_fetch_batch_plan_rebalances_after_join(spark, world_dir, tmp_path_factory):
+    """Corpus-mode fetch: the corpus scan feeds the broadcast resolver
+    join with no Exchange in between (page bodies are never shuffled
+    before the join), and a round-robin Exchange sits above the join,
+    so extraction tasks get even shares of the fetched batch rather
+    than the scan splits' host-skewed ones."""
+    from scalpel_spark.crawl.engine import CrawlEngine
+
+    out = str(tmp_path_factory.mktemp("crawl_plan3"))
+    eng = CrawlEngine(spark, world_dir, out, max_rounds=3)
+    eng.run()
+    ranked, batch = eng._politeness_batch(eng._pending_frontier(3), 0, 1000)
+    plan = eng._fetch_batch(batch)._jdf.queryExecution().executedPlan()
+    ranked.unpersist()
+
+    def pages_body_scan(n):
+        s = n.simpleString(1000)
+        return n.nodeName().startswith("Scan") and "pages.parquet" in s and "html" in s
+
+    path = _plan_path(plan, pages_body_scan)
+    assert path is not None, plan.toString()
+    names = [n.nodeName() for n in path]
+    assert "BroadcastHashJoin" in names, plan.toString()
+    j = len(names) - 1 - names[::-1].index("BroadcastHashJoin")
+    assert any(
+        n.nodeName() == "Exchange" and "RoundRobinPartitioning" in n.simpleString(1000)
+        for n in path[:j]
+    ), plan.toString()
+    assert not any("Exchange" in nm or "QueryStage" in nm for nm in names[j + 1 :]), (
+        plan.toString()
+    )

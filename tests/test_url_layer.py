@@ -65,11 +65,25 @@ class TestMurmur3:
         assert murmur3_64("x", 0) != murmur3_64("x", 1)
 
     def test_series_matches_scalar(self):
-        s = pd.Series(["a", "b", None, "http://h.example/p"])
+        """The numpy batch kernel is bit-exact against the scalar
+        reference: every tail length over 0–3 blocks, 2-, 3- and 4-byte
+        UTF-8, missing values (→ NA), a non-default seed, the empty
+        Series; the index is kept."""
+        strs = ["x" * n for n in range(49)] + ["http://h.example/p"]
+        strs += ["h/é" * n for n in range(1, 12)]
+        strs += ["€" * n + "a" for n in range(12)]
+        strs += ["😀" * n + "ab" for n in range(10)]
+        s = pd.Series(strs + [None], index=range(100, 100 + len(strs) + 1))
         out = hash_series(s)
-        assert out[0] == murmur3_64("a")
-        assert pd.isna(out[2])
-        assert out[3] == murmur3_64("http://h.example/p")
+        assert out.dtype == "Int64"
+        assert list(out.index) == list(s.index)
+        assert out.iloc[:-1].tolist() == [murmur3_64(x) for x in strs]
+        assert pd.isna(out.iloc[-1])
+        assert hash_series(s.iloc[:20], seed=3).tolist() == [
+            murmur3_64(x, 3) for x in strs[:20]
+        ]
+        empty = hash_series(pd.Series([], dtype=object))
+        assert len(empty) == 0 and empty.dtype == "Int64"
 
     def test_int64_range(self):
         v = murmur3_64("http://host.example/some/page")
