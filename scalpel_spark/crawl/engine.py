@@ -88,12 +88,13 @@ Scale notes (10^10 frontier, 1000 executors):
 * politeness ranking partitions by host; hot hosts are pre-pruned by a
   salted first-phase top-k so no partition ever sees more than
   ``n_salts × budget`` rows per host.
-* global fetch_seq is a row_number over the *politeness-bounded* batch
-  (≤ Σ per-host budgets per round), not over the frontier; the
-  host-order prefix sum is a two-level scan (range-partitioned local
-  cumsum + a partition-offset pass over ≤ shuffle-partitions rows), so
-  no window ever runs on a single partition regardless of host
-  cardinality.
+* global fetch_seq is one row_number over (host, rank) on the
+  *politeness-bounded* batch (≤ Σ per-host budgets per round), not over
+  the frontier. That single-partition window is bounded because it is
+  never larger than what the round already broadcasts: corpus mode
+  broadcasts the whole batch into the resolver join, and both modes
+  broadcast its (url_hash, url) keys as the next rounds' tombstones
+  (≤ C × Σ budgets rows).
 * exact resume: state lives in per-round parquet + manifest
   (tableio.SnapshotStore); a torn round never commits. The broadcast
   bloom is rebuilt from the committed deltas on resume (one
@@ -104,18 +105,8 @@ Scale notes (10^10 frontier, 1000 executors):
 from __future__ import annotations
 
 import os
-import sys
 import time
 from typing import Iterable
-
-_TRACE = os.environ.get("SCALPEL_CRAWL_TRACE", "") == "1"
-
-
-def _trace(msg: str, t0: float) -> float:
-    t = time.perf_counter()
-    if _TRACE:
-        print(f"[crawl-trace] {msg}: {t - t0:.2f}s", file=sys.stderr, flush=True)
-    return t
 
 import numpy as np
 import pandas as pd
@@ -334,13 +325,8 @@ class CrawlEngine:
             F.col("max_fetches_per_round").alias("budget"),
             F.col("disallow_prefixes").alias("disallow"),
         ).persist()
-        # known-host cardinality decides the fetch_seq prefix-sum shape:
-        # below the threshold a single window over one-row-per-host is
-        # cheapest; above it the two-level range-partitioned scan keeps
-        # every window partition-parallel (one tiny count job, at init
-        # only — never per round)
-        self._n_known_hosts = self.robots.count()  # also materializes the cache
-        self._two_level_scan = self._n_known_hosts > 100_000
+        # fill the robots cache at set-up, not in the first round
+        self.robots.count()
 
     # ------------------------------------------------------------------
 
@@ -644,15 +630,15 @@ class CrawlEngine:
 
     def _politeness_batch(
         self, frontier: DataFrame, seq_offset: int, n_pending: int | None = None
-    ):
+    ) -> DataFrame:
         """Salted two-phase per-host top-k + global fetch_seq.
 
-        fetch_seq = seq_offset + exclusive-prefix-sum of per-host batch
-        sizes in host order + within-host rank. The prefix sum is
-        two-level: hosts are range-partitioned (so cross-partition order
-        is exact), each partition cumsums locally in parallel, and only
-        the per-partition totals (≤ shuffle partitions rows) see a
-        single-partition window."""
+        fetch_seq = seq_offset + position in (host, within-host rank)
+        order: one row_number over the politeness-bounded batch, which is
+        never larger than what the round already broadcasts (see the
+        module docstring). Returns the batch persisted, because
+        ``_fetch_batch`` reads it three times; the caller unpersists it
+        after the ``round_data`` write."""
         cand = frontier.join(
             F.broadcast(self.robots.select("host", "budget")), "host", "left"
         ).withColumn(
@@ -675,67 +661,14 @@ class CrawlEngine:
             pre.withColumn("rank", F.row_number().over(w2) - 1)
             .where(F.col("rank") < F.col("budget"))
             .drop(*(["salt", "r1", "budget"] if salted else ["budget"]))
-        ).persist()
-
-        if not salted:
-            # small-pending regime (same threshold as the salt skip): the
-            # politeness batch is ≤ pending ≤ 200k rows, so one global
-            # row_number over (host, rank) — the identical host-order
-            # prefix + within-host rank total order — replaces the
-            # per-host count aggregation, the offset window, and the
-            # broadcast join (two fewer sub-jobs per round). The batch
-            # side is politeness-bounded, so the single-partition sort is
-            # trivially cheap here; large pendings take the two-level
-            # scan below unchanged.
-            w_seq = Window.orderBy("host", "rank")
-            # row_number is IntegerType: promote BEFORE adding the
-            # offset, or a crawl past 2^31 total fetches would wrap
-            # (the salted path's host_base sum is already long)
-            batch = ranked.withColumn(
-                "fetch_seq",
-                (F.row_number().over(w_seq).cast("long") - 1 + F.lit(seq_offset)),
-            )
-            return ranked, batch
-
-        counts = ranked.groupBy("host").agg((F.max("rank") + 1).alias("cnt"))
-        if self._two_level_scan:
-            n_parts = self.spark.sparkContext.defaultParallelism
-            parts = counts.repartitionByRange(n_parts, "host").withColumn(
-                "pid", F.spark_partition_id()
-            )
-            w_local = Window.partitionBy("pid").orderBy("host").rowsBetween(
-                Window.unboundedPreceding, -1
-            )
-            w_pid = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-            pid_off = (
-                parts.groupBy("pid")
-                .agg(F.sum("cnt").alias("pcnt"))
-                .select(
-                    "pid", F.coalesce(F.sum("pcnt").over(w_pid), F.lit(0)).alias("poff")
-                )
-            )
-            host_base = parts.join(F.broadcast(pid_off), "pid").select(
-                "host",
-                (F.col("poff") + F.coalesce(F.sum("cnt").over(w_local), F.lit(0))).alias(
-                    "host_base"
-                ),
-            )
-        else:
-            # one row per host: a single cumulative window is cheaper
-            # than the range-partitioner's sampling pass
-            w_host = Window.orderBy("host").rowsBetween(Window.unboundedPreceding, -1)
-            host_base = counts.select(
-                "host", F.coalesce(F.sum("cnt").over(w_host), F.lit(0)).alias("host_base")
-            )
-        batch = (
-            ranked.join(F.broadcast(host_base), "host")
-            .withColumn(
-                "fetch_seq",
-                (F.col("host_base") + F.col("rank") + F.lit(seq_offset)).cast("long"),
-            )
-            .drop("host_base")
         )
-        return ranked, batch
+        # row_number is IntegerType: promote BEFORE adding the offset, or
+        # a crawl past 2^31 total fetches would wrap
+        w_seq = Window.orderBy("host", "rank")
+        return ranked.withColumn(
+            "fetch_seq",
+            F.row_number().over(w_seq).cast("long") - 1 + F.lit(seq_offset),
+        ).persist()
 
     def _fetch_batch(self, batch: DataFrame):
         """Politeness batch → (…, status, html) rows, partitioned for the
@@ -819,19 +752,16 @@ class CrawlEngine:
                     "budget_scale": self.budget_scale,
                 }
             )
-            t0 = time.perf_counter()
             obs = Observation()
             path = self.store.table_path(-1, "frontier_delta")
             self._seed_frontier().select(*_FRONTIER_COLS).observe(
                 obs, F.count(F.lit(1)).alias("rows")
             ).write.mode("overwrite").parquet(path)
             pending_rows = int(obs.get["rows"])
-            t0 = _trace("bootstrap seed+write", t0)
             # bloom from the durable delta (deterministic lineage)
             self._bloom_update(
                 self._read_frontier(path).select("url_hash"), "url_hash"
             )
-            t0 = _trace("bootstrap bloom", t0)
             self.store.commit_round(
                 -1,
                 {"frontier_delta": (path, pending_rows)},
@@ -869,7 +799,7 @@ class CrawlEngine:
             if n_pending == 0:
                 break
             frontier = self._pending_frontier(rnd)
-            ranked, batch = self._politeness_batch(frontier, seq_offset, n_pending)
+            batch = self._politeness_batch(frontier, seq_offset, n_pending)
             fetched_in = self._fetch_batch(batch)
             extracted = fetched_in.mapInPandas(
                 lambda it: _extract_batches(it), _EXTRACT_SCHEMA
@@ -877,7 +807,6 @@ class CrawlEngine:
 
             # --- write 1: round_data (fetch log + images + links; its
             # (url_hash,url) columns double as the frontier tombstones) --
-            t0 = time.perf_counter()
             obs1 = Observation()
             rd_path = self.store.table_path(rnd, "round_data")
             extracted.observe(
@@ -887,8 +816,7 @@ class CrawlEngine:
             ).write.mode("overwrite").parquet(rd_path)
             m1 = obs1.get
             n_fetched = int(m1["n_fetched"])
-            ranked.unpersist()
-            t0 = _trace(f"r{rnd} politeness+fetch+extract+write", t0)
+            batch.unpersist()
 
             # --- new links: dedup → robots → bloom → exact seen check ----
             # derived from the DURABLE round_data, not the in-memory
@@ -988,7 +916,6 @@ class CrawlEngine:
             n_new = int(obs2.get["n_new"])
             prev_new = n_new
             probed.unpersist()
-            t0 = _trace(f"r{rnd} links+seen-check+delta write", t0)
 
             # --- bloom delta (fused via accumulator in broadcast mode;
             # its own distributed append job in partitioned mode) --------
@@ -1000,7 +927,6 @@ class CrawlEngine:
                     self._read_frontier(fr_path).select("url_hash"), "url_hash"
                 )
             self._bloom_release()
-            t0 = _trace(f"r{rnd} bloom delta", t0)
             if (
                 self.bloom_mode == "partitioned"
                 and rnd > 0
@@ -1026,7 +952,6 @@ class CrawlEngine:
                 # anomaly (e.g. duplicate corpus URLs inflating the
                 # resolver join) can't drift silently across rounds
                 pending_rows = brows
-                t0 = _trace(f"r{rnd} frontier compact", t0)
             self.store.commit_round(
                 rnd,
                 tables,

@@ -1,4 +1,4 @@
-from .extract import extract_records, selector_prefilter, scrape_udf_json
+from .extract import extract_records, selector_prefilter
 from .session import get_spark
 
-__all__ = ["extract_records", "selector_prefilter", "scrape_udf_json", "get_spark"]
+__all__ = ["extract_records", "selector_prefilter", "get_spark"]

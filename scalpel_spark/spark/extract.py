@@ -20,7 +20,6 @@ Scale notes (100 TB corpus):
 
 from __future__ import annotations
 
-import json
 from typing import Iterable, Sequence
 
 import pandas as pd
@@ -193,23 +192,3 @@ def extract_records_with_errors(
 
     return in_df.mapInPandas(gen, schema=full_schema)
 
-
-def scrape_udf_json(scraper: Scraper):
-    """A scalar Pandas UDF: html → JSON-encoded scraper result (null on
-    failure). For when the result should stay one-column-per-page
-    (e.g. debugging, or feeding ``from_json``)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.StringType())
-    def _scrape(html: pd.Series) -> pd.Series:
-        run = scraper.run
-        out = []
-        for doc in html:
-            if doc is None:
-                out.append(None)
-                continue
-            v = run(parse_spec(doc))
-            out.append(None if v is FAIL else json.dumps(v))
-        return pd.Series(out)
-
-    return _scrape

@@ -2,20 +2,16 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
-#: Partitions-per-core for Python compute stages. Default 2: one extra
-#: wave of tail-balancing headroom over perfectly-even 1×, without the
-#: task-launch tax of finer splits — measured on this host, a 5k-row
-#: Python identity stage costs 0.97 s at 4×32 partitions vs 0.37 s at
-#: 1×32 (each tiny task pays ~5 ms of scheduling + Arrow round-trip
-#: setup, serialized through the driver). At production scale per-task
-#: work dwarfs that overhead and a larger factor only smooths the tail;
-#: operators there raise it via this env knob (or pass min_partitions)
-#: rather than every second-scale stage paying 4× task launches.
-_SPREAD_FACTOR = int(os.environ.get("SPARK_GRAFT_SPREAD_FACTOR", "2"))
+#: Partitions-per-core for Python compute stages: one extra wave of
+#: tail-balancing headroom over perfectly-even 1×, without the
+#: task-launch tax of finer splits — measured on a 32-slot host, a
+#: 5k-row Python identity stage costs 0.97 s at 4×32 partitions vs
+#: 0.37 s at 1×32 (each tiny task pays ~5 ms of scheduling + Arrow
+#: round-trip setup, serialized through the driver). Callers that need
+#: more partitions pass ``min_partitions``.
+_SPREAD_FACTOR = 2
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

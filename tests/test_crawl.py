@@ -126,26 +126,56 @@ def test_image_fidelity_vs_corpus(spark, world_dir, engine_result):
             assert np.array_equal(decoded, truth)
 
 
-@pytest.mark.parametrize("two_level", [False, True], ids=["single_window", "two_level"])
 def test_salted_politeness_matches_simulator(
-    spark, world_dir, sim_result, tmp_path_factory, monkeypatch, two_level
+    spark, world_dir, sim_result, tmp_path_factory, monkeypatch
 ):
-    """The production politeness path — salted pre-phase, per-host
-    counts and the host_base prefix sum, as a single cumulative window
-    or as the two-level range-partitioned scan — reproduces the
-    simulator. The test world is far below both thresholds, so they are
-    forced."""
+    """The production politeness path — the salted pre-phase ahead of
+    the per-host window — reproduces the simulator. The test world is
+    far below the salt-skip threshold, so salting is forced."""
     from scalpel_spark.crawl.engine import CrawlEngine
 
     monkeypatch.setattr(CrawlEngine, "_SALT_SKIP_PENDING", 0)
     out = str(tmp_path_factory.mktemp("crawl_salted"))
     eng = CrawlEngine(spark, world_dir, out, max_rounds=MAX_ROUNDS)
-    eng._two_level_scan = two_level
     summary = eng.run()
     assert summary["total_fetched"] == len(sim_result.fetch_log)
     assert _eng_log_tuples(eng) == _sim_log_tuples(sim_result)
     eng_seen = {(r.url_hash, r.url) for r in eng.seen_df().collect()}
     assert eng_seen == {(h, u) for h, u in sim_result.seen.items()}
+
+
+def test_fetch_seq_is_contiguous_long_and_regime_independent(
+    spark, world_dir, tmp_path_factory, monkeypatch
+):
+    """fetch_seq is a long, is contiguous from the offset in (host,
+    rank) order even when the offset sits just below 2^31 (no int32
+    wrap), and the salted and unsalted regimes assign identical
+    (fetch_seq, url) rows — the salt prune is exact."""
+    from pyspark.sql import types as T
+
+    from scalpel_spark.crawl.engine import CrawlEngine
+
+    out = str(tmp_path_factory.mktemp("crawl_seq"))
+    eng = CrawlEngine(spark, world_dir, out, max_rounds=3)
+    eng.run()
+    frontier = eng._pending_frontier(3)
+    offset = 2**31 - 3
+
+    def seq_rows():
+        batch = eng._politeness_batch(frontier, offset, 1000)
+        dtype = batch.schema["fetch_seq"].dataType
+        rows = batch.select("host", "rank", "fetch_seq", "url").collect()
+        batch.unpersist()
+        assert dtype == T.LongType()
+        rows.sort(key=lambda r: (r.host, r.rank))
+        assert [r.fetch_seq for r in rows] == list(range(offset, offset + len(rows)))
+        return sorted((r.fetch_seq, r.url) for r in rows)
+
+    unsalted = seq_rows()
+    monkeypatch.setattr(CrawlEngine, "_SALT_SKIP_PENDING", 0)
+    salted = seq_rows()
+    assert len(unsalted) > 2
+    assert salted == unsalted
 
 
 def test_partitioned_bloom_mode_matches(spark, world_dir, sim_result, tmp_path_factory):
@@ -351,9 +381,9 @@ def test_fetch_batch_plan_rebalances_after_join(spark, world_dir, tmp_path_facto
     out = str(tmp_path_factory.mktemp("crawl_plan3"))
     eng = CrawlEngine(spark, world_dir, out, max_rounds=3)
     eng.run()
-    ranked, batch = eng._politeness_batch(eng._pending_frontier(3), 0, 1000)
+    batch = eng._politeness_batch(eng._pending_frontier(3), 0, 1000)
     plan = eng._fetch_batch(batch)._jdf.queryExecution().executedPlan()
-    ranked.unpersist()
+    batch.unpersist()
 
     def pages_body_scan(n):
         s = n.simpleString(1000)
