@@ -218,19 +218,12 @@ def cosine_similarity_join(
     )
 
 
-def lsh_recall(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    **lsh_kwargs,
+def _topk_recall(
+    approx: DataFrame, vectors: DataFrame, queries: DataFrame, k: int, id_col: str, vec_col: str
 ) -> DataFrame:
-    """Measured recall of ``lsh_topk`` against the exact ``cosine_topk``:
-    one row (n_queries, n_exact, n_hit, recall_pct). The standing
-    quality gate for the ANN scale path."""
+    """Recall of an approximate top-k frame against the exact
+    ``cosine_topk``: one row (n_queries, n_exact, n_hit, recall_pct)."""
     exact = cosine_topk(vectors, queries, k=k, id_col=id_col, vec_col=vec_col)
-    approx = lsh_topk(vectors, queries, k=k, id_col=id_col, vec_col=vec_col, **lsh_kwargs)
     hit = exact.join(
         approx.select("query_id", "neighbor_id", F.lit(1).alias("hit")),
         ["query_id", "neighbor_id"],
@@ -244,6 +237,21 @@ def lsh_recall(
             "recall_pct"
         ),
     )
+
+
+def lsh_recall(
+    vectors: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    **lsh_kwargs,
+) -> DataFrame:
+    """Measured recall of ``lsh_topk`` against the exact ``cosine_topk``:
+    one row (n_queries, n_exact, n_hit, recall_pct). The standing
+    quality gate for the ANN scale path."""
+    approx = lsh_topk(vectors, queries, k=k, id_col=id_col, vec_col=vec_col, **lsh_kwargs)
+    return _topk_recall(approx, vectors, queries, k, id_col, vec_col)
 
 
 def similarity_join_lsh(
@@ -533,18 +541,5 @@ def ivf_recall(
     """Measured recall of ``ivf_topk`` against the exact ``cosine_topk``:
     one row (n_queries, n_exact, n_hit, recall_pct) — the standing
     quality gate for the IVF scale path (pattern of ``lsh_recall``)."""
-    exact = cosine_topk(vectors, queries, k=k, id_col=id_col, vec_col=vec_col)
     approx = ivf_topk(vectors, queries, k=k, id_col=id_col, vec_col=vec_col, **ivf_kwargs)
-    hit = exact.join(
-        approx.select("query_id", "neighbor_id", F.lit(1).alias("hit")),
-        ["query_id", "neighbor_id"],
-        "left",
-    )
-    return hit.agg(
-        F.countDistinct("query_id").alias("n_queries"),
-        F.count(F.lit(1)).alias("n_exact"),
-        F.coalesce(F.sum("hit"), F.lit(0)).alias("n_hit"),
-        F.round(F.coalesce(F.sum("hit"), F.lit(0)) * 100.0 / F.count(F.lit(1)), 1).alias(
-            "recall_pct"
-        ),
-    )
+    return _topk_recall(approx, vectors, queries, k, id_col, vec_col)

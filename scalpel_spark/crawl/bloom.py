@@ -117,54 +117,21 @@ class BloomShards:
         k = max(1, round(0.693 * per_shard * n_shards / max(n_keys, 1)))
         return cls(n_shards, per_shard, min(k, 12))
 
-    # --- key → (shard, h1, h2) -------------------------------------------
-
-    def _split(self, hashes: np.ndarray):
-        shard = shard_of(hashes, self.n_shards)
-        h1, h2 = probe_arrays(hashes)
-        return shard, h1, h2
+    # --- per-shard delegation to the engine's kernels ---------------------
 
     def add_many(self, hashes) -> None:
         hashes = np.asarray(hashes, dtype=np.int64)
-        if hashes.size == 0:
-            return
-        shard, h1, h2 = self._split(hashes)
-        m = _U64(self.m)
-        for s in range(self.n_shards):
-            mask = shard == s
-            if not mask.any():
-                continue
-            sh1, sh2 = h1[mask], h2[mask]
-            bits = self.bits[s]
-            with np.errstate(over="ignore"):
-                for i in range(self.k):
-                    idx = (sh1 + _U64(i) * sh2) % m
-                    np.bitwise_or.at(
-                        bits, (idx >> _U64(3)).astype(np.int64),
-                        np.left_shift(np.uint8(1), (idx & _U64(7)).astype(np.uint8)),
-                    )
+        shard = shard_of(hashes, self.n_shards)
+        for s in np.unique(shard):
+            self.bits[s] |= build_bits(hashes[shard == s], self.m, self.k)
 
     def contains_many(self, hashes) -> np.ndarray:
         hashes = np.asarray(hashes, dtype=np.int64)
-        if hashes.size == 0:
-            return np.zeros(0, dtype=bool)
-        shard, h1, h2 = self._split(hashes)
+        shard = shard_of(hashes, self.n_shards)
         out = np.ones(hashes.size, dtype=bool)
-        m = _U64(self.m)
-        with np.errstate(over="ignore"):
-            for s in range(self.n_shards):
-                mask = shard == s
-                if not mask.any():
-                    continue
-                sh1, sh2 = h1[mask], h2[mask]
-                bits = self.bits[s]
-                ok = np.ones(sh1.size, dtype=bool)
-                for i in range(self.k):
-                    idx = (sh1 + _U64(i) * sh2) % m
-                    byte = bits[(idx >> _U64(3)).astype(np.int64)]
-                    bit = (byte >> (idx & _U64(7)).astype(np.uint8)) & 1
-                    ok &= bit.astype(bool)
-                out[mask] = ok
+        for s in np.unique(shard):
+            mask = shard == s
+            out[mask] = contains_in_bits(self.bits[s], hashes[mask], self.m, self.k)
         return out
 
     # --- (de)serialization: shard rows for parquet/broadcast -------------

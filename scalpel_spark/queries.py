@@ -911,20 +911,9 @@ def minhash_neardup_docs(spark, sf_dir):
     candidate→verify dedup pipeline. The oracle brute-forces exact
     jaccard over all pairs, so any LSH recall loss or shingle-pipeline
     divergence shows up as a row mismatch."""
-    from scalpel_spark.spark.util import persist_candidates
-    from scalpel_spark.textops import (
-        exact_jaccard_verify,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
+    from scalpel_spark.textops import minhash_neardup
 
-    d = _t(spark, sf_dir, "documents")
-    # persisted: the banding self-join references the signature frame on
-    # both sides — uncached, the Arrow signature stage runs twice per
-    # action (same rule as minhash_neardup / dedup_clusters_docs)
-    sigs = persist_candidates(minhash_signatures(d))
-    cand = lsh_candidate_pairs(sigs, n_bands=16)
-    return exact_jaccard_verify(cand, d, threshold=0.5)
+    return minhash_neardup(_t(spark, sf_dir, "documents"), threshold=0.5)
 
 
 @q(
@@ -957,19 +946,10 @@ def dedup_clusters_docs(spark, sf_dir):
     (iterative min-label propagation, rounds = component diameter); the
     oracle walks the same verified-jaccard edge set with a recursive CTE.
     This is the keep/drop key a corpus-dedup pipeline materializes."""
-    from scalpel_spark.textops import (
-        exact_jaccard_verify,
-        lsh_candidate_pairs,
-        minhash_signatures,
-        neardup_clusters,
-    )
-
-    from scalpel_spark.spark.util import persist_candidates
+    from scalpel_spark.textops import minhash_neardup, neardup_clusters
 
     d = _t(spark, sf_dir, "documents")
-    sigs = persist_candidates(minhash_signatures(d))
-    pairs = exact_jaccard_verify(lsh_candidate_pairs(sigs, n_bands=16), d, 0.5)
-    return neardup_clusters(d, pairs)
+    return neardup_clusters(d, minhash_neardup(d, threshold=0.5))
 
 
 @q("simhash_neardup_docs", _NEARDUP_ORACLE_SQL)
@@ -983,12 +963,11 @@ def simhash_neardup_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     cand = simhash_neardup(d, max_hamming=12)
-    # est_screen measured OFF here: the chunk-pair blocking + inline
-    # hamming filter already reduce candidates to 260 pairs at sf0.1
-    # (256 survive exact verify), so the minhash screen's two extra
-    # stages cost more than the ~0 verify work they'd save. The screen
-    # (exact_jaccard_verify(est_screen=True)) pays off when candidate
-    # sets are large relative to true matches — see
+    # no estimate screen here: the chunk-pair blocking + inline hamming
+    # filter already reduce candidates to 260 pairs at sf0.1 (256
+    # survive exact verify), so a minhash screen's extra stages would
+    # cost more than the ~0 verify work they'd save. The screen pays off
+    # when candidate sets are large relative to true matches — see
     # ngram_jaccard_neardup, where banding admits ~600k candidates.
     return exact_jaccard_verify(cand, d, threshold=0.5)
 

@@ -8,13 +8,16 @@ Design rules (100 TB corpus):
 * Python appears only as Arrow-batched pandas UDFs computing per-doc
   signatures (minhash/simhash/langid/fingerprint) — O(1) output per doc,
   so the shuffle that follows carries signatures, never text;
-* near-dup candidate generation is LSH banding: shuffle keyed on
-  (band_id, band_hash) so each bucket is tiny; exact verification runs
-  only inside buckets. No all-pairs joins anywhere;
-* hamming candidate generation runs over DISTINCT signatures with
-  pigeonhole (k+1)-chunk blocking — duplicate-signature cliques
-  (boilerplate/empty docs) cost one candidate row, and recall is exact
-  for the requested distance;
+* the three near-dup families (word-shingle minhash, simhash,
+  char-n-gram minhash) share one shape: signatures → candidate pairs →
+  one exact set-jaccard verify (``exact_jaccard_verify``). Minhash
+  candidates come from LSH banding: shuffle keyed on (band_id,
+  band_hash) so each bucket is tiny. No all-pairs joins anywhere;
+* hamming candidate generation is pigeonhole chunk blocking, exact for
+  the requested distance. When signatures repeat heavily (the
+  degenerate regime) it runs over DISTINCT signatures, so
+  duplicate-signature cliques (boilerplate/empty docs) cost one
+  candidate row; otherwise it blocks the (id, sig) rows directly;
 * all string hashing is numpy-vectorized FNV-1a (one pass per char
   position across the whole batch) — no per-byte Python anywhere.
 """
@@ -127,20 +130,15 @@ def _shingle_hashes_from_words(wh: np.ndarray, k: int) -> np.ndarray:
         return _fmix64_np(acc)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    n_hashes: int = 64,
-    shingle_k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+def _minhash(
+    df: DataFrame, feature_hashes, n_hashes: int, text_col: str, id_col: str
 ) -> DataFrame:
-    """(id, sig: array<bigint>) — vectorized: per doc, one numpy
-    (n_shingles × n_hashes) min-reduction using splitmix-style remixes of
-    the shingle hashes (no per-hash python loops over shingles)."""
-    seeds = np.arange(1, n_hashes + 1, dtype=np.uint64) * np.uint64(
-        0x9E3779B97F4A7C15
-    )
-
+    """(id, sig: array<bigint>) — the minhash kernel of both families:
+    per doc, one numpy (n_features × n_hashes) min-reduction (no
+    per-hash python loops over features). ``feature_hashes(texts)`` maps
+    an Arrow batch's texts to per-doc non-empty uint64 feature-hash
+    arrays."""
+    seeds = np.arange(1, n_hashes + 1, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
     schema = T.StructType(
         [
             T.StructField(id_col, df.schema[id_col].dataType),
@@ -150,16 +148,29 @@ def minhash_signatures(
 
     def gen(batches):
         for pdf in batches:
-            ids = pdf[id_col].tolist()
             sigs = []
-            for wh in _word_hash_arrays(pdf[text_col]):
-                sh = _shingle_hashes_from_words(wh, shingle_k)
-                # remix: fmix64(shingle ^ seed) — distinct hash per seed
-                m = _fmix64_np(sh[:, None] ^ seeds[None, :])
+            for fh in feature_hashes(pdf[text_col]):
+                # remix: fmix64(feature ^ seed) — distinct hash per seed
+                m = _fmix64_np(fh[:, None] ^ seeds[None, :])
                 sigs.append(m.min(axis=0).astype(np.int64).tolist())
-            yield pd.DataFrame({id_col: ids, "sig": sigs})
+            yield pd.DataFrame({id_col: pdf[id_col].tolist(), "sig": sigs})
 
     return spread(df.select(id_col, text_col)).mapInPandas(gen, schema)
+
+
+def minhash_signatures(
+    df: DataFrame,
+    n_hashes: int = 64,
+    shingle_k: int = 3,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """(id, sig) minhash over k-word shingle hashes."""
+
+    def shingles(texts):
+        return [_shingle_hashes_from_words(wh, shingle_k) for wh in _word_hash_arrays(texts)]
+
+    return _minhash(df, shingles, n_hashes, text_col, id_col)
 
 
 def lsh_candidate_pairs(
@@ -221,16 +232,17 @@ def minhash_neardup(
     n_bands: int = 16,
     shingle_k: int = 3,
 ) -> DataFrame:
-    """shingle → minhash → band → bucket-join → estimate ≥ threshold.
+    """shingle → minhash → band → bucket-join → EXACT shingle-set jaccard
+    ≥ threshold: (id_a, id_b, jacc_i4).
 
-    The signature frame is persisted (tiny: id + 64 int64s per doc):
-    the banding self-join references it on both sides and the estimate
-    join twice more — without the cache the Arrow signature stage runs
-    4× per action."""
+    The signature frame is persisted (tiny: id + 64 int64s per doc): the
+    banding self-join references it on both sides — without the cache
+    the Arrow signature stage runs twice per action."""
     sigs = _persist_candidates(minhash_signatures(df, shingle_k=shingle_k))
     pairs = lsh_candidate_pairs(sigs, n_bands=n_bands)
-    est = minhash_jaccard_pairs(sigs, pairs)
-    return est.where(F.col("est_jaccard") >= threshold)
+    return exact_jaccard_verify(
+        pairs, df, threshold, set_col=shingle_set_col(F.col("text"), shingle_k)
+    )
 
 
 def shingle_set_col(text_col, k: int = 3):
@@ -254,69 +266,48 @@ def exact_jaccard_verify(
     pairs: DataFrame,
     docs: DataFrame,
     threshold: float = 0.5,
-    shingle_k: int = 3,
+    set_col=None,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    est_screen: bool = False,
 ) -> DataFrame:
-    """Exact shingle-set jaccard for candidate pairs, entirely JVM-side
+    """Exact set jaccard for candidate pairs, entirely JVM-side
     (array_intersect / array_distinct in codegen); emits
     (id_a, id_b, jacc_i4) with jacc_i4 = round(j·10⁴) ≥ the integer
-    threshold — the verification stage of the candidate→verify dedup
-    pipeline. Shuffles carry only (id, shingle-array) for candidates,
-    never the corpus.
+    threshold — the verification stage of every candidate→verify dedup
+    pipeline. ``set_col`` is the per-doc distinct feature-array column
+    over ``docs`` (default: ``shingle_set_col(text, 3)``; the char-gram
+    family passes ``char_ngram_set_col``). Shuffles carry only
+    (id, feature-array) for candidates, never the corpus.
 
     Scale bound: the semi-join prune below BROADCASTS the candidate-id
     set, so callers must keep |candidates| broadcast-sized (the same
     contract as the pair-frame broadcasts in this plan). A candidate
     generator that emits corpus-scale pair sets (degenerate corpus +
-    weak blocking) needs the est_screen or a pre-filter first — the
-    broadcast failing loudly is preferable to silently shuffling the
-    corpus text, which is what Catalyst picked without the hint.
-
-    ``est_screen=True`` inserts a signature-estimate screen between
-    candidates and exact verify: 64-hash minhash signatures are computed
-    for candidate docs only, and pairs with est_jaccard <
-    threshold − 0.15 (≈3σ of the estimator below the cut) are dropped
-    before the ~10²-element shingle arrays are ever built. Use it for
-    candidate generators whose selectivity is weak in jaccard terms
-    (e.g. wide-k simhash blocking): verify cost then follows TRUE
-    near-dups rather than the candidate background."""
+    weak blocking) needs an estimate screen or a pre-filter first (see
+    ``ngram_jaccard_neardup``) — the broadcast failing loudly is
+    preferable to silently shuffling the corpus text, which is what
+    Catalyst picked without the hint."""
+    if set_col is None:
+        set_col = shingle_set_col(F.col("text"), 3)
     # the candidate subtree is referenced three times below (pairs, and
     # both sides of the id prune) — persist so the (possibly expensive)
     # blocking join runs once per action, not three times; the cached
     # frame is just the candidate id pairs, tiny by construction
     # (registered for release_candidate_cache())
     pairs = _persist_candidates(pairs.select("id_a", "id_b").distinct())
-
-    def _prune(p):
-        # shingle arrays / signatures are built ONLY for docs that appear
-        # in a candidate pair (semi-join prune): verification cost scales
-        # with the candidate set, not the corpus. The id set is BROADCAST
-        # (bounded by 2×|candidates|, the same order as the pair frames
-        # already broadcast below) — without the hint Catalyst can't size
-        # the cached-union subtree and sort-merge-shuffles the DOCUMENT
-        # TEXT for a semi join against a few hundred ids
-        ids = (
-            p.select(F.col("id_a").alias(id_col))
-            .unionByName(p.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        return docs.join(F.broadcast(ids), id_col, "left_semi")
-
-    if est_screen:
-        sigs = minhash_signatures(
-            _prune(pairs), shingle_k=shingle_k, text_col=text_col, id_col=id_col
-        )
-        pairs = _persist_candidates(
-            minhash_jaccard_pairs(sigs, pairs, id_col=id_col)
-            .where(F.col("est_jaccard") >= threshold - 0.15)
-            .select("id_a", "id_b")
-        )
-    needed = _prune(pairs)
-    sh = needed.select(
-        F.col(id_col), shingle_set_col(F.col(text_col), shingle_k).alias("sh")
+    # feature arrays are built ONLY for docs that appear in a candidate
+    # pair (semi-join prune): verification cost scales with the candidate
+    # set, not the corpus. The id set is BROADCAST (bounded by
+    # 2×|candidates|, the same order as the pair frames already
+    # broadcast below) — without the hint Catalyst can't size the
+    # cached-union subtree and sort-merge-shuffles the DOCUMENT TEXT for
+    # a semi join against a few hundred ids
+    ids = (
+        pairs.select(F.col("id_a").alias(id_col))
+        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
+        .distinct()
     )
+    needed = docs.join(F.broadcast(ids), id_col, "left_semi")
+    sh = needed.select(F.col(id_col), set_col.alias("sh"))
     a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
     j = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
@@ -759,12 +750,18 @@ def doc_fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id
 # word-boundary edits where word-shingles shift)
 
 
-def _char_ngram_lists(texts, n: int) -> list[list[str]]:
-    out = []
+def _char_ngram_hash_arrays(texts, n: int) -> list[np.ndarray]:
+    """Per-doc arrays of DISTINCT char-n-gram FNV hashes for an Arrow
+    batch (texts of length ≤ n contribute themselves as the single gram):
+    gram slicing is a per-doc Python comprehension, hashing one flat
+    vectorized FNV pass."""
+    gram_lists = []
     for t in texts:
         t = (t or "").lower()
-        out.append([t[i : i + n] for i in range(len(t) - n + 1)] if len(t) > n else [t])
-    return out
+        gram_lists.append([t[i : i + n] for i in range(len(t) - n + 1)] if len(t) > n else [t])
+    counts = np.fromiter((len(g) for g in gram_lists), np.int64, len(gram_lists))
+    flat = _fnv1a_many([g for gs in gram_lists for g in gs])
+    return [np.unique(gh) for gh in np.split(flat, np.cumsum(counts)[:-1])] if gram_lists else []
 
 
 def char_minhash_signatures(
@@ -774,32 +771,11 @@ def char_minhash_signatures(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """(id, sig) minhash over character n-grams — same vectorized
-    min-reduction as ``minhash_signatures``, different feature space.
-    Gram slicing is a per-doc Python comprehension but all hashing is
-    one flat vectorized FNV pass per Arrow batch."""
-    seeds = np.arange(1, n_hashes + 1, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
-    schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType),
-            T.StructField("sig", T.ArrayType(T.LongType())),
-        ]
+    """(id, sig) minhash over character n-grams — the same kernel as
+    ``minhash_signatures``, different feature space."""
+    return _minhash(
+        df, lambda texts: _char_ngram_hash_arrays(texts, ngram_n), n_hashes, text_col, id_col
     )
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf[id_col].tolist()
-            gram_lists = _char_ngram_lists(pdf[text_col], ngram_n)
-            counts = np.fromiter((len(g) for g in gram_lists), np.int64, len(gram_lists))
-            flat = _fnv1a_many([g for gs in gram_lists for g in gs])
-            sigs = []
-            for gh in np.split(flat, np.cumsum(counts)[:-1]) if len(gram_lists) else []:
-                gh = np.unique(gh)
-                m = _fmix64_np(gh[:, None] ^ seeds[None, :])
-                sigs.append(m.min(axis=0).astype(np.int64).tolist())
-            yield pd.DataFrame({id_col: ids, "sig": sigs})
-
-    return spread(df.select(id_col, text_col)).mapInPandas(gen, schema)
 
 
 def char_ngram_set_col(text_col, n: int = 4):
@@ -820,10 +796,10 @@ def ngram_jaccard_neardup(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """char-n-gram minhash → LSH banding → EXACT char-n-gram jaccard
-    verification ≥ threshold: (id_a, id_b, jacc_i4). Candidate cost is
-    bucket-local; exact verification is semi-join-pruned to candidate
-    docs and runs entirely in codegen (array_intersect/array_distinct)."""
+    """char-n-gram minhash → LSH banding → estimate screen → EXACT
+    char-n-gram jaccard verification ≥ threshold: (id_a, id_b, jacc_i4).
+    Candidate cost is bucket-local; exact verification is
+    ``exact_jaccard_verify`` over ``char_ngram_set_col``."""
     sigs = _persist_candidates(
         char_minhash_signatures(df, ngram_n=ngram_n, text_col=text_col, id_col=id_col)
     )
@@ -838,29 +814,10 @@ def ngram_jaccard_neardup(
     # touching the ~10³-element gram arrays: verify cost follows TRUE
     # near-dups, not the background. Same probabilistic-recall contract
     # as banding.
-    pairs = _persist_candidates(
+    pairs = (
         minhash_jaccard_pairs(sigs, raw, id_col=id_col)
         .where(F.col("est_jaccard") >= threshold - 0.15)
-        .select("id_a", "id_b")
     )
-    # broadcast for the same reason as exact_jaccard_verify._prune: the
-    # candidate-id set is small by contract; without the hint the corpus
-    # text is shuffled for the semi join
-    ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    needed = df.join(F.broadcast(ids), id_col, "left_semi")
-    sh = needed.select(F.col(id_col), char_ngram_set_col(F.col(text_col), ngram_n).alias("gr"))
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("gr").alias("gr_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("gr").alias("gr_b"))
-    j = F.size(F.array_intersect("gr_a", "gr_b")) / F.size(
-        F.array_distinct(F.concat("gr_a", "gr_b"))
-    )
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", F.round(j * 10000).cast("long").alias("jacc_i4"))
-        .where(F.col("jacc_i4") >= int(round(threshold * 10000)))
+    return exact_jaccard_verify(
+        pairs, df, threshold, set_col=char_ngram_set_col(F.col(text_col), ngram_n), id_col=id_col
     )

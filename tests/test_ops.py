@@ -421,34 +421,107 @@ class TestAudio:
         assert got[1]["duration_ms"] == 500
 
 
-def test_exact_jaccard_verify_est_screen_same_pairs(spark, docs_with_dups):
-    """est_screen=True must return the same verified pair set (the
-    screen only drops pairs ~3 sigma below the threshold, which exact
-    verification would reject anyway) — the option trades stages for
-    verify volume, never answers."""
-    from pyspark.sql import functions as F
-
+def test_ngram_neardup_screen_keeps_unscreened_verify_pairs(spark, docs_with_dups):
+    """ngram_jaccard_neardup's estimate screen must return the same
+    verified pair set as exact_jaccard_verify over the UNSCREENED
+    banding candidates (the screen only drops pairs ~3 sigma below the
+    threshold, which exact verification would reject anyway) — it
+    trades verify volume, never answers."""
     from scalpel_spark.textops import (
+        char_minhash_signatures,
+        char_ngram_set_col,
         exact_jaccard_verify,
         lsh_candidate_pairs,
-        minhash_signatures,
+        ngram_jaccard_neardup,
         release_candidate_cache,
     )
 
-    sigs = minhash_signatures(docs_with_dups)
-    cand = lsh_candidate_pairs(sigs, n_bands=16)
-    plain = {
-        (r["id_a"], r["id_b"], r["jacc_i4"])
-        for r in exact_jaccard_verify(cand, docs_with_dups, 0.5).collect()
-    }
+    base = docs_with_dups.where("doc_id = 0").first()["text"]
+    typo = base.replace("brown", "browm").replace("partitions", "partitons")
+    docs = docs_with_dups.unionByName(
+        spark.createDataFrame([(6, typo)], "doc_id long, text string")
+    )
     screened = {
         (r["id_a"], r["id_b"], r["jacc_i4"])
+        for r in ngram_jaccard_neardup(docs, ngram_n=4, threshold=0.8).collect()
+    }
+    cand = lsh_candidate_pairs(char_minhash_signatures(docs, ngram_n=4), n_bands=16)
+    plain = {
+        (r["id_a"], r["id_b"], r["jacc_i4"])
         for r in exact_jaccard_verify(
-            cand, docs_with_dups, 0.5, est_screen=True
+            cand, docs, 0.8, set_col=char_ngram_set_col(F.col("text"), 4)
         ).collect()
     }
     release_candidate_cache()
-    assert plain and screened == plain
+    assert any(p[:2] == (0, 6) for p in plain)  # the planted char-level near-dup
+    assert screened == plain
+
+
+def _fnv1a(s):
+    h = 1469598103934665603
+    for byte in s.encode("utf-8"):
+        h = ((h ^ byte) * 1099511628211) & ((1 << 64) - 1)
+    return h
+
+
+def _word_shingle_reference(text, k=3):
+    """k-word shingle hashes (before fmix64): the degree-(k-1) polynomial
+    over consecutive FNV-1a word hashes; < k words → one shingle over
+    all words; no words → the constant 0."""
+    import re
+
+    wh = [_fnv1a(w) for w in re.findall(r"\w+", (text or "").lower())]
+    if not wh:
+        return [0]
+    kk = min(k, len(wh))
+    out = []
+    for i in range(len(wh) - kk + 1):
+        acc = wh[i]
+        for w in wh[i + 1 : i + kk]:
+            acc = (acc * 0x100000001B3 + w) & ((1 << 64) - 1)
+        out.append(acc)
+    return out
+
+
+def _fmix64(k):
+    mask = (1 << 64) - 1
+    k ^= k >> 33
+    k = (k * 0xFF51AFD7ED558CCD) & mask
+    k ^= k >> 33
+    k = (k * 0xC4CEB9FE1A85EC53) & mask
+    return k ^ (k >> 33)
+
+
+def _minhash_reference(features, n_hashes=64):
+    """One doc's minhash signature: per seed_i = i · 0x9E3779B97F4A7C15
+    (mod 2^64), the min over features of fmix64(feature ^ seed_i), as
+    int64."""
+    seeds = [(i * 0x9E3779B97F4A7C15) & ((1 << 64) - 1) for i in range(1, n_hashes + 1)]
+    mins = [min(_fmix64(f ^ seed) for f in features) for seed in seeds]
+    return [v - (1 << 64) if v >= 1 << 63 else v for v in mins]
+
+
+def test_minhash_signatures_match_per_doc_reference(spark, docs_with_dups):
+    """Both minhash families pin to a one-doc-at-a-time reference: word
+    3-shingles (fmix64 of the shingle polynomial) and distinct char
+    4-grams (FNV-1a), each through the same 64-seed min-reduction."""
+    from scalpel_spark.textops import char_minhash_signatures, minhash_signatures
+
+    docs = docs_with_dups.unionByName(
+        spark.createDataFrame(
+            [(7, ""), (8, None), (9, "two words"), (10, "abc")], "doc_id long, text string"
+        )
+    )
+    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
+    word = {r["doc_id"]: r["sig"] for r in minhash_signatures(docs).collect()}
+    char = {r["doc_id"]: r["sig"] for r in char_minhash_signatures(docs, ngram_n=4).collect()}
+    assert set(word) == set(char) == set(texts)
+    for doc_id, text in texts.items():
+        shingles = {_fmix64(h) for h in _word_shingle_reference(text)}
+        assert word[doc_id] == _minhash_reference(shingles), doc_id
+        t = (text or "").lower()
+        grams = [t[i : i + 4] for i in range(len(t) - 3)] if len(t) > 4 else [t]
+        assert char[doc_id] == _minhash_reference({_fnv1a(g) for g in grams}), doc_id
 
 
 def test_image_features_corrupt_blob_yields_decode_false(spark):

@@ -2,7 +2,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from scalpel_spark.crawl.bloom import BloomShards, CuckooFilter
+from scalpel_spark.crawl.bloom import BloomShards, CuckooFilter, build_bits, shard_of
 from scalpel_spark.crawl.hashing import hash_series, murmur3_64, murmur3_x64_128
 from scalpel_spark.crawl.urlnorm import canonicalize_url
 
@@ -125,6 +125,23 @@ class TestBloom:
         b.add_many(kb)
         a.merge(b)
         assert a.contains_many(ka).all() and a.contains_many(kb).all()
+
+    @pytest.mark.parametrize("n_shards,m,k", [(16, 1 << 16, 7), (5, 800, 12), (1, 4096, 3)])
+    def test_per_shard_kernel_bits_found_by_contains_many(self, n_shards, m, k):
+        """The engine builds shards with ``build_bits`` over each shard's
+        keys and probes with ``BloomShards``: if the two disagree, the
+        broadcast probe gives false negatives and a seen URL skips the
+        exact seen check."""
+        rng = np.random.default_rng(n_shards)
+        keys = rng.integers(-(1 << 63), (1 << 63) - 1, size=5000, dtype=np.int64)
+        shard = shard_of(keys, n_shards)
+        bf = BloomShards(n_shards, m, k)
+        for s in range(n_shards):
+            bf.load_shard(s, build_bits(keys[shard == s], m, k).tobytes())
+        assert bf.contains_many(keys).all()
+        added = BloomShards(n_shards, m, k)
+        added.add_many(keys)
+        assert all((x == y).all() for x, y in zip(added.bits, bf.bits))
 
 
 class TestCuckoo:
