@@ -45,9 +45,18 @@ def optimal_bits_per_key(fpp: float) -> float:
 
 def shard_of(hashes: np.ndarray, n_shards: int) -> np.ndarray:
     """Shard routing: high 16 bits of the uint64 view, mod n_shards.
-    Spark-side equivalent: ``pmod(shiftrightunsigned(url_hash, 48), n)``."""
+    Spark-side twin: ``shard_col``."""
     h = np.asarray(hashes, dtype=np.int64).view(np.uint64)
     return ((h >> _U64(48)) % _U64(n_shards)).astype(np.int64)
+
+
+def shard_col(col, n_shards: int):
+    """``shard_of`` as an int Column over a long hash column (name or
+    Column). Grouped bloom builds route with this and probes with
+    ``shard_of``: any disagreement is a bloom false negative."""
+    from pyspark.sql import functions as F
+
+    return F.pmod(F.shiftrightunsigned(col, 48), F.lit(n_shards)).cast("int")
 
 
 def probe_arrays(hashes: np.ndarray):

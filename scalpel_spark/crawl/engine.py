@@ -141,7 +141,7 @@ class _BloomBitsAccum(AccumulatorParam):
                 v1[s] = bits
         return v1
 
-from .bloom import BloomShards, build_bits, contains_in_bits, shard_of
+from .bloom import BloomShards, build_bits, contains_in_bits, shard_col, shard_of
 from .hashing import murmur3_64_batch
 from .logic import DEFAULT_BUDGET, PRIORITY_DECAY, extract_page
 from .tableio import SnapshotStore
@@ -392,10 +392,6 @@ class CrawlEngine:
     def _bloom_table(self) -> str:
         return os.path.join(self.store.root, "bloom_table")
 
-    def _shard_expr(self, hash_col: str):
-        n_shards = self._bloom_cfg[0]
-        return F.pmod(F.shiftrightunsigned(F.col(hash_col), 48), F.lit(n_shards)).cast("int")
-
     def _bloom_maybe_seen(self, df: DataFrame, hash_col: str) -> DataFrame:
         """Adds boolean ``maybe_seen``.
 
@@ -427,11 +423,11 @@ class CrawlEngine:
             return df.withColumn("maybe_seen", probe(F.col(hash_col)))
 
         # partitioned: cogroup(link rows, bloom delta rows) on shard
-        _, m, k = self._bloom_cfg
+        n_shards, m, k = self._bloom_cfg
         bloom_rows = self.spark.read.schema(
             "shard int, m int, k int, bits binary"
         ).parquet(self._bloom_table)
-        left = df.withColumn("__shard", self._shard_expr(hash_col))
+        left = df.withColumn("__shard", shard_col(hash_col, n_shards))
         out_schema = T.StructType(
             [T.StructField("__shard", T.IntegerType())] + list(schema.fields)
         )
@@ -473,7 +469,7 @@ class CrawlEngine:
             )
 
         return (
-            df_hashes.select(F.col(hash_col), self._shard_expr(hash_col).alias("shard"))
+            df_hashes.select(F.col(hash_col), shard_col(hash_col, n_shards).alias("shard"))
             .groupBy("shard")
             .applyInPandas(build, "shard int, m int, k int, bits binary")
         )

@@ -2,13 +2,13 @@
 ``(image_id, bytes, w, h, fmt, caption, phash)``.
 
 The binary payload is opaque to Catalyst; every pixel-touching operator
-is an Arrow-batched ``mapInPandas`` whose *plumbing* (schema, carry
-columns, batch shape) is real and tested. PNG decode (pure numpy+zlib),
-baseline JPEG decode (pure-numpy SOF0, ``datagen/jpeg.py``) and WAV
-decode (RIFF/PCM16, ``datagen/wav.py``) are real; codecs not present in
-this environment (video frames, progressive/subsampled jpeg) are
-stubbed behind ``NotImplementedError`` with the same signatures, per
-the build contract.
+is one Arrow-batched row kernel (``spark.util.map_rows``: schema, carry
+columns, decode memo). PNG decode (pure numpy+zlib), baseline JPEG
+decode (pure-numpy SOF0, ``datagen/jpeg.py``), MJPEG video frames
+(``datagen/mjpeg.py``) and WAV decode (RIFF/PCM16, ``datagen/wav.py``)
+are real; formats no codec here reads (e.g. progressive/subsampled
+jpeg) raise ``NotImplementedError`` inside the kernel and surface as
+``decode_ok=false`` rows.
 
 Scale notes: feature rows are tiny (stats, hashes) — the shuffle after
 these operators never carries pixels. ``phash_neardup`` joins on 16-bit
@@ -23,34 +23,15 @@ import zlib
 from struct import error as struct_error
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .datagen.images import decode_png, mean_hash_64
+from .spark.util import map_rows, spread
 
 #: Rec.601 luma weights (hoisted: building the array per row costs more
 #: than the matmul on thumbnail-sized images)
 _LUMA_W = np.array([0.299, 0.587, 0.114])
-
-#: Task-local decode-memo bound: decode is a pure function of the blob
-#: bytes, so content-duplicated corpora (re-uploads, mirrored assets,
-#: the synthesized group-structured test tables) pay one decode per
-#: DISTINCT blob per task instead of one per row. Entries are keyed by
-#: a 16-byte BLAKE2 digest of the blob — never the blob itself — so on
-#: all-unique corpora the memo retains only digests + tiny feature
-#: tuples, not up to 512 full media payloads per task. Past the cap we
-#: compute without storing (one digest per row — ~µs against ms-scale
-#: decode).
-_DECODE_MEMO_MAX = 512
-
-
-def _blob_key(blob: bytes) -> bytes:
-    import hashlib
-
-    return hashlib.blake2b(blob, digest_size=16).digest()
-
 
 def decode_image(blob: bytes, fmt: str) -> np.ndarray:
     """bytes → (h, w, 3) uint8. Native here: 'png' (numpy+zlib codec)
@@ -81,18 +62,11 @@ def resize_block_mean(px: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     return out
 
 
-_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("decoded_w", T.IntegerType()),
-        T.StructField("decoded_h", T.IntegerType()),
-        T.StructField("mean_r", T.DoubleType()),
-        T.StructField("mean_g", T.DoubleType()),
-        T.StructField("mean_b", T.DoubleType()),
-        T.StructField("luma_hist", T.ArrayType(T.IntegerType())),  # 16 bins
-        T.StructField("phash_check", T.LongType()),
-        T.StructField("decode_ok", T.BooleanType()),
-    ]
+#: ``luma_hist`` has 16 bins
+_FEATURE_SCHEMA = (
+    "image_id string, decoded_w int, decoded_h int, mean_r double, "
+    "mean_g double, mean_b double, luma_hist array<int>, "
+    "phash_check bigint, decode_ok boolean"
 )
 
 
@@ -104,104 +78,61 @@ def image_features(df: DataFrame, carry_cols: tuple = ()) -> DataFrame:
     (same pattern as extract_records): callers that need features NEXT
     TO source metadata (image_stats) get one decode pass instead of a
     join whose other branch re-runs the upstream pipeline."""
-    schema = T.StructType(
-        list(_FEATURE_SCHEMA.fields)
-        + [T.StructField(c, df.schema[c].dataType) for c in carry_cols]
-    )
 
-    def compute(blob: bytes, fmt: str) -> tuple:
+    def features(blob, fmt) -> list:
         try:
-            px = decode_image(blob, fmt)
+            px = decode_image(bytes(blob), fmt)
             gray = px.astype(np.float64) @ _LUMA_W
             hist = np.histogram(gray, bins=16, range=(0, 256))[0]
-            return (
-                int(px.shape[1]),
-                int(px.shape[0]),
-                float(px[:, :, 0].mean()),
-                float(px[:, :, 1].mean()),
-                float(px[:, :, 2].mean()),
-                hist.astype(int).tolist(),
-                mean_hash_64(px),
-                True,
-            )
+            return [
+                (
+                    int(px.shape[1]),
+                    int(px.shape[0]),
+                    float(px[:, :, 0].mean()),
+                    float(px[:, :, 1].mean()),
+                    float(px[:, :, 2].mean()),
+                    hist.astype(int).tolist(),
+                    mean_hash_64(px),
+                    True,
+                )
+            ]
         except (NotImplementedError, ValueError, zlib.error, struct_error):
             # unsupported fmt, corrupt/truncated stream, bad inflate —
             # all surface as decode_ok=false rows per the README decode
             # contract, never failed jobs
-            return (None, None, None, None, None, None, None, False)
+            return [(None, None, None, None, None, None, None, False)]
 
-    def gen(batches):
-        # decode-distinct-once: features are a pure function of (blob,
-        # fmt), so a per-task memo turns duplicated-content corpora into
-        # one decode per distinct blob (see _DECODE_MEMO_MAX)
-        memo: dict = {}
-        for pdf in batches:
-            out = {f.name: [] for f in _FEATURE_SCHEMA.fields}
-            for c in carry_cols:
-                out[c] = pdf[c].tolist()
-            for iid, blob, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                b = bytes(blob)
-                key = (_blob_key(b), fmt)
-                feats = memo.get(key)
-                if feats is None:
-                    feats = compute(b, fmt)
-                    if len(memo) < _DECODE_MEMO_MAX:
-                        memo[key] = feats
-                dw, dh, mr, mg, mb, hist, ph, ok = feats
-                out["image_id"].append(iid)
-                out["decoded_w"].append(dw)
-                out["decoded_h"].append(dh)
-                out["mean_r"].append(mr)
-                out["mean_g"].append(mg)
-                out["mean_b"].append(mb)
-                out["luma_hist"].append(hist)
-                out["phash_check"].append(ph)
-                out["decode_ok"].append(ok)
-            yield pd.DataFrame(out)
-
-    in_cols = ["image_id", "bytes", "fmt"] + [
-        c for c in carry_cols if c not in ("image_id", "bytes", "fmt")
-    ]
-    return df.select(*in_cols).mapInPandas(gen, schema)
+    # features are a pure function of (blob, fmt): the memo decodes each
+    # distinct blob once per task; ids ride along as carry columns
+    return map_rows(
+        df,
+        ["bytes", "fmt"],
+        _FEATURE_SCHEMA,
+        features,
+        carry_cols=("image_id", *carry_cols),
+        memo=True,
+    )
 
 
 def thumbnails(df: DataFrame, out_h: int = 8, out_w: int = 8) -> DataFrame:
     """Decode → block-mean resize → re-encoded PNG thumbnail column."""
     from .datagen.images import encode_png
 
-    schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType()),
-            T.StructField("thumb", T.BinaryType()),
-        ]
+    def thumb(blob, fmt) -> list:
+        try:
+            px = decode_image(bytes(blob), fmt)
+            return [(encode_png(resize_block_mean(px, out_h, out_w)),)]
+        except (NotImplementedError, ValueError, zlib.error, struct_error):
+            return [(None,)]
+
+    return map_rows(
+        df, ["bytes", "fmt"], "image_id string, thumb binary", thumb, carry_cols=["image_id"]
     )
 
-    def gen(batches):
-        for pdf in batches:
-            ids, thumbs = [], []
-            for iid, blob, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                try:
-                    px = decode_image(bytes(blob), fmt)
-                    thumbs.append(encode_png(resize_block_mean(px, out_h, out_w)))
-                    ids.append(iid)
-                except (NotImplementedError, ValueError, zlib.error, struct_error):
-                    ids.append(iid)
-                    thumbs.append(None)
-            yield pd.DataFrame({"image_id": ids, "thumb": thumbs})
 
-    return df.select("image_id", "bytes", "fmt").mapInPandas(gen, schema)
-
-
-_IMAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()),
-        T.StructField("h", T.IntegerType()),
-        T.StructField("fmt", T.StringType()),
-        T.StructField("caption", T.StringType()),
-        T.StructField("phash", T.LongType()),
-    ]
+_IMAGE_SCHEMA = (
+    "image_id string, bytes binary, w int, h int, fmt string, "
+    "caption string, phash bigint"
 )
 
 
@@ -231,46 +162,35 @@ def synthesize_images(
     from .datagen.images import encode_png
     from .datagen.jpeg import decode_jpeg, encode_jpeg
 
-    def gen(batches):
-        blob_cache: dict = {}
-        for pdf in batches:
-            out = {f.name: [] for f in _IMAGE_SCHEMA.fields}
-            for raw_id in pdf[id_col]:
-                i = int(raw_id)
-                g = i % n_groups
-                w = 16 + (g % 5) * 4
-                h = 16 + (g * 7 % 3) * 8
-                fmt = "png" if i % 2 == 0 else "jpeg"
-                key = (g, fmt)
-                if key not in blob_cache:
-                    rng = np.random.default_rng(1000 + g)
-                    px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-                    if fmt == "png":
-                        blob = encode_png(px)
-                        ph = mean_hash_64(px)
-                    else:
-                        blob = encode_jpeg(px, quality=95)
-                        ph = mean_hash_64(decode_jpeg(blob))
-                    blob_cache[key] = (blob, ph)
-                blob, ph = blob_cache[key]
-                out["image_id"].append(str(i))
-                out["bytes"].append(blob)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["fmt"].append(fmt)
-                out["caption"].append(f"cap-{i}")
-                out["phash"].append(ph)
-            yield pd.DataFrame(out)
+    # per-task cache: each task unpickles its own empty dict
+    blob_cache: dict = {}
+
+    def image(raw_id) -> list:
+        i = int(raw_id)
+        g = i % n_groups
+        w = 16 + (g % 5) * 4
+        h = 16 + (g * 7 % 3) * 8
+        fmt = "png" if i % 2 == 0 else "jpeg"
+        key = (g, fmt)
+        if key not in blob_cache:
+            rng = np.random.default_rng(1000 + g)
+            px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+            if fmt == "png":
+                blob = encode_png(px)
+                ph = mean_hash_64(px)
+            else:
+                blob = encode_jpeg(px, quality=95)
+                ph = mean_hash_64(decode_jpeg(blob))
+            blob_cache[key] = (blob, ph)
+        blob, ph = blob_cache[key]
+        return [(str(i), blob, w, h, fmt, f"cap-{i}", ph)]
 
     # partition BY GROUP, not round-robin: members of one group share
     # their (deterministically re-generated) blob, so co-locating a
     # group makes the per-task blob cache hit ~100% — round-robin spread
     # would re-encode every group in every task (~40× the encode work)
-    return (
-        ids.select(id_col)
-        .repartition(n_groups, F.col(id_col) % n_groups)
-        .mapInPandas(gen, _IMAGE_SCHEMA)
-    )
+    grouped = ids.select(id_col).repartition(n_groups, F.col(id_col) % n_groups)
+    return map_rows(grouped, [id_col], _IMAGE_SCHEMA, image)
 
 
 def phash_neardup(df: DataFrame, max_hamming: int = 6) -> DataFrame:
@@ -284,17 +204,9 @@ def phash_neardup(df: DataFrame, max_hamming: int = 6) -> DataFrame:
     )
 
 
-_AUDIO_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("audio_id", T.LongType()),
-        T.StructField("sr", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("rms_i4", T.LongType()),
-        T.StructField("zcr", T.LongType()),
-        T.StructField("centroid_mhz", T.LongType()),
-        T.StructField("decode_ok", T.BooleanType()),
-    ]
+_AUDIO_FEATURE_SCHEMA = (
+    "audio_id bigint, sr int, n_samples bigint, duration_ms bigint, "
+    "rms_i4 bigint, zcr bigint, centroid_mhz bigint, decode_ok boolean"
 )
 
 
@@ -315,52 +227,43 @@ def audio_features(df: DataFrame) -> DataFrame:
     never cross an exchange."""
     from .datagen.wav import decode_wav
 
-    def gen(batches):
-        for pdf in batches:
-            out = {f.name: [] for f in _AUDIO_FEATURE_SCHEMA.fields}
-            for aid, blob in zip(pdf["audio_id"], pdf["bytes"]):
-                try:
-                    sr, s = decode_wav(bytes(blob))
-                    f = s.astype(np.float64)
-                    n = len(s)
-                    rms = float(np.sqrt((f * f).sum() / n)) if n else 0.0
-                    zcr = int(((f[1:] * f[:-1]) < 0).sum()) if n > 1 else 0
-                    if n > 1:
-                        spec = np.abs(np.fft.rfft(f)) ** 2
-                        freqs = np.fft.rfftfreq(n, d=1.0 / sr)
-                        tot = spec[1:].sum()  # exclude DC
-                        cent = float((freqs[1:] * spec[1:]).sum() / tot) if tot > 0 else 0.0
-                    else:
-                        cent = 0.0
-                    out["audio_id"].append(int(aid))
-                    out["sr"].append(sr)
-                    out["n_samples"].append(n)
-                    # half-away-from-zero (values are ≥ 0 here), matching
-                    # DuckDB ROUND(); Python round() is banker's and would
-                    # diverge on an exact .5 tie
-                    out["duration_ms"].append(int(math.floor(1000 * n / sr + 0.5)))
-                    out["rms_i4"].append(int(math.floor(rms * 10000 + 0.5)))
-                    out["zcr"].append(zcr)
-                    out["centroid_mhz"].append(int(math.floor(cent * 1000 + 0.5)))
-                    out["decode_ok"].append(True)
-                except (ValueError, struct_error):
-                    out["audio_id"].append(int(aid))
-                    for c in ("sr", "n_samples", "duration_ms", "rms_i4", "zcr", "centroid_mhz"):
-                        out[c].append(None)
-                    out["decode_ok"].append(False)
-            yield pd.DataFrame(out)
+    def features(blob) -> list:
+        try:
+            sr, s = decode_wav(bytes(blob))
+            f = s.astype(np.float64)
+            n = len(s)
+            rms = float(np.sqrt((f * f).sum() / n)) if n else 0.0
+            zcr = int(((f[1:] * f[:-1]) < 0).sum()) if n > 1 else 0
+            if n > 1:
+                spec = np.abs(np.fft.rfft(f)) ** 2
+                freqs = np.fft.rfftfreq(n, d=1.0 / sr)
+                tot = spec[1:].sum()  # exclude DC
+                cent = float((freqs[1:] * spec[1:]).sum() / tot) if tot > 0 else 0.0
+            else:
+                cent = 0.0
+            # half-away-from-zero (values are ≥ 0 here), matching DuckDB
+            # ROUND(); Python round() is banker's and would diverge on an
+            # exact .5 tie
+            return [
+                (
+                    sr,
+                    n,
+                    int(math.floor(1000 * n / sr + 0.5)),
+                    int(math.floor(rms * 10000 + 0.5)),
+                    zcr,
+                    int(math.floor(cent * 1000 + 0.5)),
+                    True,
+                )
+            ]
+        except (ValueError, struct_error):
+            return [(None,) * 6 + (False,)]
 
-    return df.select("audio_id", "bytes").mapInPandas(gen, _AUDIO_FEATURE_SCHEMA)
+    return map_rows(
+        df, ["bytes"], _AUDIO_FEATURE_SCHEMA, features, carry_cols=["audio_id"]
+    )
 
 
-_AUDIO_SCHEMA = T.StructType(
-    [
-        T.StructField("audio_id", T.LongType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("sr", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-    ]
-)
+_AUDIO_SCHEMA = "audio_id bigint, bytes binary, sr int, n_samples bigint"
 
 
 def synthesize_audio(ids: DataFrame, id_col: str = "doc_id", sr: int = 8000) -> DataFrame:
@@ -376,25 +279,16 @@ def synthesize_audio(ids: DataFrame, id_col: str = "doc_id", sr: int = 8000) -> 
 
     from .datagen.wav import encode_wav
 
-    def gen(batches):
-        for pdf in batches:
-            out = {f.name: [] for f in _AUDIO_SCHEMA.fields}
-            for raw_id in pdf[id_col]:
-                i = int(raw_id)
-                n = 800 + (i % 5) * 400
-                idx = np.arange(n, dtype=np.int64)
-                s = ((i * 31 + idx * 17) % 201 - 100).astype(np.int16)
-                out["audio_id"].append(i)
-                out["bytes"].append(encode_wav(s, sr))
-                out["sr"].append(sr)
-                out["n_samples"].append(n)
-            yield pd.DataFrame(out)
-
-    from .spark.util import spread
+    def clip(raw_id) -> list:
+        i = int(raw_id)
+        n = 800 + (i % 5) * 400
+        idx = np.arange(n, dtype=np.int64)
+        s = ((i * 31 + idx * 17) % 201 - 100).astype(np.int16)
+        return [(i, encode_wav(s, sr), sr, n)]
 
     # spread for the same reason as synthesize_images: the encode stage
     # and the downstream decode/FFT stage are Python work
-    return spread(ids.select(id_col)).mapInPandas(gen, _AUDIO_SCHEMA)
+    return map_rows(spread(ids.select(id_col)), [id_col], _AUDIO_SCHEMA, clip)
 
 
 def synthesize_split_images(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -414,40 +308,21 @@ def synthesize_split_images(ids: DataFrame, id_col: str = "doc_id") -> DataFrame
     no pixel math."""
     from .datagen.images import encode_png
 
-    def gen(batches):
-        for pdf in batches:
-            out = {f.name: [] for f in _IMAGE_SCHEMA.fields}
-            for raw_id in pdf[id_col]:
-                i = int(raw_id)
-                w = 8 + (i % 3) * 4
-                px = np.empty((16, w, 3), dtype=np.uint8)
-                px[:8] = [i * 37 % 256, i * 59 % 256, i * 83 % 256]
-                px[8:] = [i * 101 % 256, i * 113 % 256, i * 127 % 256]
-                out["image_id"].append(str(i))
-                out["bytes"].append(encode_png(px))
-                out["w"].append(w)
-                out["h"].append(16)
-                out["fmt"].append("png")
-                out["caption"].append(f"cap-{i}")
-                out["phash"].append(mean_hash_64(px))
-            yield pd.DataFrame(out)
-
-    from .spark.util import spread
+    def image(raw_id) -> list:
+        i = int(raw_id)
+        w = 8 + (i % 3) * 4
+        px = np.empty((16, w, 3), dtype=np.uint8)
+        px[:8] = [i * 37 % 256, i * 59 % 256, i * 83 % 256]
+        px[8:] = [i * 101 % 256, i * 113 % 256, i * 127 % 256]
+        return [(str(i), encode_png(px), w, 16, "png", f"cap-{i}", mean_hash_64(px))]
 
     # no shared blobs here (every image unique) — plain spread is right
-    return spread(ids.select(id_col)).mapInPandas(gen, _IMAGE_SCHEMA)
+    return map_rows(spread(ids.select(id_col)), [id_col], _IMAGE_SCHEMA, image)
 
 
-_VIDEO_SCHEMA = T.StructType(
-    [
-        T.StructField("video_id", T.LongType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("fps", T.IntegerType()),
-        T.StructField("w", T.IntegerType()),
-        T.StructField("h", T.IntegerType()),
-        T.StructField("fmt", T.StringType()),
-    ]
+_VIDEO_SCHEMA = (
+    "video_id bigint, bytes binary, n_frames int, fps int, w int, h int, "
+    "fmt string"
 )
 
 
@@ -472,52 +347,34 @@ def synthesize_videos(
     the JPEG segment structure, not from stored offsets."""
     from .datagen.mjpeg import encode_mjpeg
 
-    def gen(batches):
-        blob_cache: dict = {}
-        for pdf in batches:
-            out = {f.name: [] for f in _VIDEO_SCHEMA.fields}
-            for raw_id in pdf[id_col]:
-                i = int(raw_id)
-                g = i % n_groups
-                nf = 4 + (g % 5)
-                w = 16 + (g % 3) * 8
-                h = 16 + (g * 5 % 2) * 16
-                if g not in blob_cache:
-                    frames = [
-                        np.random.default_rng(3000 + g * 64 + f).integers(
-                            0, 256, (h, w, 3), dtype=np.uint8
-                        )
-                        for f in range(nf)
-                    ]
-                    blob_cache[g] = encode_mjpeg(frames, quality=95)
-                out["video_id"].append(i)
-                out["bytes"].append(blob_cache[g])
-                out["n_frames"].append(nf)
-                out["fps"].append(fps)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["fmt"].append("mjpeg")
-            yield pd.DataFrame(out)
+    # per-task cache: each task unpickles its own empty dict
+    blob_cache: dict = {}
+
+    def video(raw_id) -> list:
+        i = int(raw_id)
+        g = i % n_groups
+        nf = 4 + (g % 5)
+        w = 16 + (g % 3) * 8
+        h = 16 + (g * 5 % 2) * 16
+        if g not in blob_cache:
+            frames = [
+                np.random.default_rng(3000 + g * 64 + f).integers(
+                    0, 256, (h, w, 3), dtype=np.uint8
+                )
+                for f in range(nf)
+            ]
+            blob_cache[g] = encode_mjpeg(frames, quality=95)
+        return [(i, blob_cache[g], nf, fps, w, h, "mjpeg")]
 
     # group-partitioned for the same reason as synthesize_images: one
     # encode per group per task instead of one per task × group
-    return (
-        ids.select(id_col)
-        .repartition(n_groups, F.col(id_col) % n_groups)
-        .mapInPandas(gen, _VIDEO_SCHEMA)
-    )
+    grouped = ids.select(id_col).repartition(n_groups, F.col(id_col) % n_groups)
+    return map_rows(grouped, [id_col], _VIDEO_SCHEMA, video)
 
 
-_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("video_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_w", T.IntegerType()),
-        T.StructField("frame_h", T.IntegerType()),
-        T.StructField("frame_phash", T.LongType()),
-        T.StructField("mean_luma", T.DoubleType()),
-        T.StructField("decode_ok", T.BooleanType()),
-    ]
+_FRAME_SCHEMA = (
+    "video_id bigint, frame_idx int, frame_w int, frame_h int, "
+    "frame_phash bigint, mean_luma double, decode_ok boolean"
 )
 
 
@@ -539,14 +396,10 @@ def video_frame_sample(
     branch would re-run synthesis."""
     from .datagen.mjpeg import decode_mjpeg_frame, split_mjpeg
 
-    schema = T.StructType(
-        list(_FRAME_SCHEMA.fields)
-        + [T.StructField(c, df.schema[c].dataType) for c in carry_cols]
-    )
-
-    def sample_stream(b: bytes) -> list:
+    def sample_stream(blob) -> list:
         """Split + decode + per-frame features for one stream — a pure
         function of the blob bytes (every_n is fixed per operator)."""
+        b = bytes(blob)
         try:
             spans = split_mjpeg(b)
         except (ValueError, IndexError):
@@ -571,36 +424,13 @@ def video_frame_sample(
                 rows.append((idx, None, None, None, None, False))
         return rows
 
-    def gen(batches):
-        # decode-distinct-once (see _DECODE_MEMO_MAX): content-duplicated
-        # video corpora decode each distinct stream once per task; frame
-        # pixels still never leave the task
-        memo: dict = {}
-        for pdf in batches:
-            out = {f.name: [] for f in _FRAME_SCHEMA.fields}
-            for c in carry_cols:
-                out[c] = []
-            carries = [pdf[c].tolist() for c in carry_cols]
-            for row_i, (vid, blob) in enumerate(zip(pdf["video_id"], pdf["bytes"])):
-                b = bytes(blob)
-                key = _blob_key(b)
-                rows = memo.get(key)
-                if rows is None:
-                    rows = sample_stream(b)
-                    if len(memo) < _DECODE_MEMO_MAX:
-                        memo[key] = rows
-                v = int(vid)
-                for idx, fw, fh, ph, ml, ok in rows:
-                    out["video_id"].append(v)
-                    out["frame_idx"].append(idx)
-                    out["frame_w"].append(fw)
-                    out["frame_h"].append(fh)
-                    out["frame_phash"].append(ph)
-                    out["mean_luma"].append(ml)
-                    out["decode_ok"].append(ok)
-                    for c, vals in zip(carry_cols, carries):
-                        out[c].append(vals[row_i])
-            yield pd.DataFrame(out)
-
-    cols = ["video_id", "bytes"] + [c for c in carry_cols if c not in ("video_id",)]
-    return df.select(*cols).mapInPandas(gen, schema)
+    # decode-distinct-once: content-duplicated video corpora decode each
+    # distinct stream once per task; frame pixels never leave the task
+    return map_rows(
+        df,
+        ["bytes"],
+        _FRAME_SCHEMA,
+        sample_stream,
+        carry_cols=("video_id", *carry_cols),
+        memo=True,
+    )

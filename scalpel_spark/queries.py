@@ -703,7 +703,7 @@ def bloom_prefilter_semantics(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from scalpel_spark.crawl.bloom import BloomShards, build_bits
+    from scalpel_spark.crawl.bloom import BloomShards, build_bits, shard_col
 
     o = _t(spark, sf_dir, "orders").select(
         F.xxhash64(F.col("o_orderkey")).alias("h"),
@@ -718,10 +718,9 @@ def bloom_prefilter_semantics(spark, sf_dir):
         bits = build_bits(pdf["h"].to_numpy(np.int64), m, k)
         return pd.DataFrame([{"shard": int(key[0]), "bits": bits.tobytes()}])
 
-    shard_expr = F.pmod(F.shiftrightunsigned(F.col("h"), 48), F.lit(n_shards)).cast("int")
     delta = (
         o.where("is_seen")
-        .select("h", shard_expr.alias("shard"))
+        .select("h", shard_col("h", n_shards).alias("shard"))
         .groupBy("shard")
         .applyInPandas(build_shard, "shard int, bits binary")
     )

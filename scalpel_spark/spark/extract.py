@@ -20,9 +20,8 @@ Scale notes (100 TB corpus):
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -30,6 +29,7 @@ from pyspark.sql import types as T
 from ..index import parse_spec
 from ..scraper import FAIL, Scraper
 from ..selector import Selector, to_selector
+from .util import map_rows, spread
 
 
 def selector_prefilter(selector, html_col: str = "html") -> Column | None:
@@ -48,16 +48,22 @@ def selector_prefilter(selector, html_col: str = "html") -> Column | None:
     return F.col(html_col).rlike(f"(?i)<{name}[\\s/>]|(?i)<{name}$")
 
 
-def _value_to_row(value, n_fields: int):
-    if n_fields == 1 and not isinstance(value, (tuple, dict)):
-        return (value,)
+def _value_to_row(value, names: Sequence[str]) -> tuple:
+    """One scraped value → the tuple of the ``names`` output fields."""
     if isinstance(value, dict):
-        return value
+        return tuple(value.get(n) for n in names)
     if isinstance(value, tuple):
         return value
-    if isinstance(value, list) and len(value) == n_fields:
+    if isinstance(value, list) and len(value) == len(names) > 1:
         return tuple(value)
     return (value,)
+
+
+def _carry_first(in_df: DataFrame, carry_cols: list, out_schema) -> T.StructType:
+    """Carry columns (input types) first, then the extracted fields."""
+    if isinstance(out_schema, str):
+        out_schema = T._parse_datatype_string(out_schema)
+    return T.StructType([in_df.schema[c] for c in carry_cols] + out_schema.fields)
 
 
 def extract_records(
@@ -79,10 +85,6 @@ def extract_records(
     ``prefilter``: optional Column (or a Selector, from which a sound
     pre-filter is derived) applied before the Python stage.
     """
-    if isinstance(out_schema, str):
-        out_struct = T._parse_datatype_string(out_schema)
-    else:
-        out_struct = out_schema
     carry_cols = list(carry_cols)
     in_df = df
     if prefilter is not None:
@@ -92,42 +94,21 @@ def extract_records(
             pf = prefilter
         if pf is not None:
             in_df = in_df.filter(pf)
-    from .util import spread
-
     in_df = spread(in_df.select(*carry_cols, html_col))
+    schema = _carry_first(in_df, carry_cols, out_schema)
+    names = schema.fieldNames()[len(carry_cols) :]
+    run = scraper.run
 
-    carry_struct = [in_df.schema[c] for c in carry_cols]
-    full_schema = T.StructType(carry_struct + list(out_struct.fields))
-    out_names = [f.name for f in out_struct.fields]
-    n_fields = len(out_names)
-    all_names = carry_cols + out_names
+    def records(doc) -> list:
+        if doc is None:
+            return []
+        v = run(parse_spec(doc))
+        if v is FAIL:
+            return []
+        items = v if (explode and isinstance(v, list)) else [v]
+        return [_value_to_row(item, names) for item in items]
 
-    def gen(batches: Iterable[pd.DataFrame]):
-        run = scraper.run
-        for pdf in batches:
-            cols: dict = {name: [] for name in all_names}
-            htmls = pdf[html_col].tolist()
-            carries = [pdf[c].tolist() for c in carry_cols]
-            for i, doc in enumerate(htmls):
-                if doc is None:
-                    continue
-                v = run(parse_spec(doc))
-                if v is FAIL:
-                    continue
-                items = v if (explode and isinstance(v, list)) else [v]
-                for item in items:
-                    row = _value_to_row(item, n_fields)
-                    if isinstance(row, dict):
-                        for name in out_names:
-                            cols[name].append(row.get(name))
-                    else:
-                        for name, val in zip(out_names, row):
-                            cols[name].append(val)
-                    for c, vals in zip(carry_cols, carries):
-                        cols[c].append(vals[i])
-            yield pd.DataFrame({name: cols[name] for name in all_names})
-
-    return in_df.mapInPandas(gen, schema=full_schema)
+    return map_rows(in_df, [html_col], schema, records, carry_cols=carry_cols)
 
 
 def extract_records_with_errors(
@@ -145,50 +126,18 @@ def extract_records_with_errors(
     pipeline can route/alert on instead of silent row loss."""
     from ..scraper import scrape_with_effects
 
-    if isinstance(out_schema, str):
-        out_struct = T._parse_datatype_string(out_schema)
-    else:
-        out_struct = out_schema
     carry_cols = list(carry_cols)
-    from .util import spread
-
     in_df = spread(df.select(*carry_cols, html_col))
-    carry_struct = [in_df.schema[c] for c in carry_cols]
-    full_schema = T.StructType(
-        carry_struct
-        + list(out_struct.fields)
-        + [
-            T.StructField("errors", T.ArrayType(T.StringType())),
-            T.StructField("log", T.ArrayType(T.StringType())),
-        ]
-    )
-    out_names = [f.name for f in out_struct.fields]
-    n_fields = len(out_names)
-    all_names = carry_cols + out_names + ["errors", "log"]
+    schema = _carry_first(in_df, carry_cols, out_schema)
+    names = schema.fieldNames()[len(carry_cols) :]
+    strings = T.ArrayType(T.StringType())
+    schema = schema.add("errors", strings).add("log", strings)
 
-    def gen(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            cols: dict = {name: [] for name in all_names}
-            htmls = pdf[html_col].tolist()
-            carries = [pdf[c].tolist() for c in carry_cols]
-            for i, doc in enumerate(htmls):
-                v, errors, log = (
-                    scrape_with_effects(doc, scraper)
-                    if doc is not None
-                    else (None, ["null html"], [])
-                )
-                row = _value_to_row(v, n_fields) if v is not None else (None,) * n_fields
-                if isinstance(row, dict):
-                    for name in out_names:
-                        cols[name].append(row.get(name))
-                else:
-                    for name, val in zip(out_names, row):
-                        cols[name].append(val)
-                cols["errors"].append(errors)
-                cols["log"].append(log)
-                for c, vals in zip(carry_cols, carries):
-                    cols[c].append(vals[i])
-            yield pd.DataFrame({name: cols[name] for name in all_names})
+    def record(doc) -> list:
+        if doc is None:
+            return [(None,) * len(names) + (["null html"], [])]
+        v, errors, log = scrape_with_effects(doc, scraper)
+        row = _value_to_row(v, names) if v is not None else (None,) * len(names)
+        return [tuple(row[: len(names)]) + (errors, log)]
 
-    return in_df.mapInPandas(gen, schema=full_schema)
-
+    return map_rows(in_df, [html_col], schema, record, carry_cols=carry_cols)

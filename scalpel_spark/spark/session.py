@@ -14,6 +14,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of physical RAM, at most 48g: the Python workers, the OS and
+    other tenants need the rest, and a heap past RAM gets the JVM killed
+    mid-run instead of spilling."""
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{min(48, max(1, ram_gb // 2))}g"
+
+
 def get_spark(
     app: str = "scalpel_spark",
     master: str | None = None,
@@ -30,6 +38,7 @@ def get_spark(
     # the 100 TB story); SPARK_GRAFT_AQE=0 exists to measure its
     # per-stage replanning latency on many-small-stage pipelines
     aqe = os.environ.get("SPARK_GRAFT_AQE", "1") != "0"
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     b = (
         SparkSession.builder.master(master)
         .appName(app)
@@ -54,7 +63,7 @@ def get_spark(
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         # local mode = driver-only: give the single JVM real headroom
         # (32 task threads × arrow batches + cached corpus + shuffles)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
     )
     if extra_conf:
         for k, v in extra_conf.items():

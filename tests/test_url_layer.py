@@ -2,7 +2,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from scalpel_spark.crawl.bloom import BloomShards, CuckooFilter, build_bits, shard_of
+from scalpel_spark.crawl.bloom import BloomShards, CuckooFilter, build_bits, shard_col, shard_of
 from scalpel_spark.crawl.hashing import hash_series, murmur3_64, murmur3_x64_128
 from scalpel_spark.crawl.urlnorm import canonicalize_url
 
@@ -142,6 +142,25 @@ class TestBloom:
         added = BloomShards(n_shards, m, k)
         added.add_many(keys)
         assert all((x == y).all() for x, y in zip(added.bits, bf.bits))
+
+    def test_shard_col_matches_shard_of(self, spark):
+        """Grouped builds route keys with the Column ``shard_col``, probes
+        with numpy ``shard_of``: a key routed to a different shard than the
+        one probed is a bloom false negative."""
+        rng = np.random.default_rng(3)
+        edge = [0, -1, 1, (1 << 63) - 1, -(1 << 63), (1 << 48) - 1, 1 << 48, -(1 << 48)]
+        keys = np.concatenate(
+            [np.array(edge, dtype=np.int64),
+             rng.integers(-(1 << 63), (1 << 63) - 1, size=2000, dtype=np.int64)]
+        )
+        df = spark.createDataFrame(pd.DataFrame({"h": keys}))
+        shard_counts = (1, 4, 7, 1024, 65537)
+        got = df.select(
+            "h", *[shard_col("h", n).alias(f"s{n}") for n in shard_counts]
+        ).toPandas()
+        assert got["h"].to_numpy().tolist() == keys.tolist()
+        for n in shard_counts:
+            assert got[f"s{n}"].tolist() == shard_of(keys, n).tolist(), n
 
 
 class TestCuckoo:
